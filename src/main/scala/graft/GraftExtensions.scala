@@ -7,15 +7,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session extension wiring — the idiomatic injection point for the
-  * engine's native Catalyst expressions, so any session built with
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
-  * (or `.withExtensions(new GraftExtensions)`) gets
-  * `common_prefix_length(a, b)` in SQL, with codegen.
+  * engine's native Catalyst expressions, so every session built by
+  * [[GraftSession]] (which sets `spark.sql.extensions` to this class)
+  * gets `common_prefix_length(a, b)` in SQL, with codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,5 +1,6 @@
 package graft.mapreduce
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry — flag surface parity with the reference binary (O10,
@@ -49,16 +50,14 @@ object Main {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("mapreduce")
-      .config("spark.sql.shuffle.partitions", reducers)
+    val spark = GraftSession(
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      "spark.app.name" -> "mapreduce",
+      "spark.sql.shuffle.partitions" -> reducers.toString,
       // deterministic R output files per stage (file-layout parity):
       // AQE would coalesce small shuffle partitions
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(if (debug) "INFO" else "WARN")
+      "spark.sql.adaptive.enabled" -> "false")
+    if (debug) spark.sparkContext.setLogLevel("INFO")
 
     val result = findIteratively(spark, in, outDir, mappers, reducers,
       maxLen, debug)

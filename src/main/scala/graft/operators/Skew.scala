@@ -191,12 +191,17 @@ object Skew {
     * distinct key), a broadcast of the hot-key set (≤
     * |old|/hotThreshold rows by pigeonhole), and ×salts new-row
     * fan-out on hot keys only. Non-key column names of the two
-    * sides must be disjoint. */
+    * sides must be disjoint, and neither side may carry a column named
+    * `__hot` or `__salt` (in any case): the join adds both internally. */
   def guardedKeyJoin(oldSide: DataFrame, newSide: DataFrame,
       keys: Seq[String], saltSrc: Column,
       hotThreshold: Int = HotGroupThreshold,
       salts: Int = HotGroupSalts): DataFrame = {
     require(hotThreshold > 0 && salts > 0)
+    val reserved = (oldSide.columns ++ newSide.columns)
+      .filter(c => Set("__hot", "__salt")(c.toLowerCase))
+    require(reserved.isEmpty, "guardedKeyJoin reserves __hot and __salt; " +
+      s"input carries ${reserved.mkString(", ")}")
     val hot = oldSide.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .where(col("__n") > hotThreshold)

@@ -214,26 +214,26 @@ object StreamQueries {
     def commit(batchId: Long, delta: DataFrame): Unit =
       DeltaIndex.commit(delta, p, batchId, init, Some(bkt),
         compactEvery = 2, inlineBase = true, baseFold = fold)
-    DeltaIndex.seed(DeltaIndex.asOps(d, "u", -1L), p, Some(bkt))
-    commit(0L, DeltaIndex.asOps(d.where(col("doc_id") % 5 === 0)
-      .withColumn("v", col("v") + 500L), "u", DeltaIndex.upsertSeq(0)))
-    commit(1L, DeltaIndex.asOps(d.where(col("doc_id") % 7 === 0)
-      .withColumn("v", lit(null).cast("long")), "d",
-      DeltaIndex.deleteSeq(1)))
-    commit(2L, DeltaIndex.asOps(d.where(col("doc_id") % 14 === 0)
-      .withColumn("v", col("v") + 1000L), "u", DeltaIndex.upsertSeq(2)))
-    commit(3L, DeltaIndex.asOps(d.where(col("doc_id") % 11 === 0)
-      .withColumn("v", col("v") + 2000L), "u", DeltaIndex.upsertSeq(3)))
-    commit(4L, DeltaIndex.asOps(d.where(col("doc_id") % 13 === 0)
-      .withColumn("v", lit(null).cast("long")), "d",
-      DeltaIndex.deleteSeq(4)))
-    val out = DeltaIndex.resolveLatest(
-        DeltaIndex.readAll(p, init, s), Seq("doc_id"))
-      .agg(count(lit(1)).cast("long").as("n_live"),
-        sum("v").cast("long").as("sum_v"))
-      .localCheckpoint()
-    deleteRecursively(root)
-    out
+    try {
+      DeltaIndex.seed(DeltaIndex.asOps(d, "u", -1L), p, Some(bkt))
+      commit(0L, DeltaIndex.asOps(d.where(col("doc_id") % 5 === 0)
+        .withColumn("v", col("v") + 500L), "u", DeltaIndex.upsertSeq(0)))
+      commit(1L, DeltaIndex.asOps(d.where(col("doc_id") % 7 === 0)
+        .withColumn("v", lit(null).cast("long")), "d",
+        DeltaIndex.deleteSeq(1)))
+      commit(2L, DeltaIndex.asOps(d.where(col("doc_id") % 14 === 0)
+        .withColumn("v", col("v") + 1000L), "u", DeltaIndex.upsertSeq(2)))
+      commit(3L, DeltaIndex.asOps(d.where(col("doc_id") % 11 === 0)
+        .withColumn("v", col("v") + 2000L), "u", DeltaIndex.upsertSeq(3)))
+      commit(4L, DeltaIndex.asOps(d.where(col("doc_id") % 13 === 0)
+        .withColumn("v", lit(null).cast("long")), "d",
+        DeltaIndex.deleteSeq(4)))
+      DeltaIndex.resolveLatest(
+          DeltaIndex.readAll(p, init, s), Seq("doc_id"))
+        .agg(count(lit(1)).cast("long").as("n_live"),
+          sum("v").cast("long").as("sum_v"))
+        .localCheckpoint()
+    } finally deleteRecursively(root)
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -4,22 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test fixture: one local SparkSession per suite, configured the
-  * same way as the Verify/Bench mains (UTC, small shuffle parallelism,
-  * nanos-as-long for the events table).
+/** Shared test fixture: one local [[GraftSession]] per JVM, at a fixed
+  * small parallelism so plan and partition assertions do not depend on
+  * the host's core count.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(
+    "spark.master" -> "local[4]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.app.name" -> getClass.getSimpleName,
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse")
 
   /** Testdata root; override via GRAFT_TESTDATA on hosts with a
     * different data layout. */

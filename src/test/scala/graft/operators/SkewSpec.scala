@@ -126,6 +126,15 @@ class SkewSpec extends SparkSpec {
     assert(viaBy == plain)
   }
 
+  test("guardedKeyJoin rejects an input that already carries one of " +
+      "its internal column names") {
+    val oldSide = Seq(("a", 1L, 0)).toDF("k", "doc_old", "__salt")
+    val newSide = Seq(("a", 2L)).toDF("k", "doc_new")
+    intercept[IllegalArgumentException] {
+      Skew.guardedKeyJoin(oldSide, newSide, Seq("k"), col("doc_old"))
+    }
+  }
+
   test("text_common_bigrams_cms equals text_common_bigrams row for " +
       "row (the hot-set swap is invisible in the result)") {
     val exact = graft.SparkEntry
