@@ -72,14 +72,12 @@ object Lecture {
     * express every lecture task, mapreduce.h:9-10): constant key, squared
     * value, per-partition sum, merge +. */
   def sumOfSquaresViaMapReduce(spark: SparkSession, lines: Dataset[String],
-      mappers: Int = 3, reducers: Int = 2): Long = {
-    import spark.implicits._
+      mappers: Int = 3, reducers: Int = 2): Long =
     new MapReduceJob[String, Int, Long](
       mappers, reducers,
       mapper = line => List(("x", line.trim.toInt)),
       reducer = it => it.map { case (_, v) => v.toLong * v }.sum,
       merge = _ + _).run(lines)
-  }
 
   /** Count-distinct-by-absolute-value through the generic API: key |x|,
     * sorted-stream change counting per partition (the lecture's
@@ -87,8 +85,7 @@ object Lecture {
     * puts each key in exactly one partition, so per-partition distinct
     * counts add up to the global count. */
   def countDistinctAbsViaMapReduce(spark: SparkSession,
-      lines: Dataset[String], mappers: Int = 3, reducers: Int = 2): Long = {
-    import spark.implicits._
+      lines: Dataset[String], mappers: Int = 3, reducers: Int = 2): Long =
     new MapReduceJob[Int, Int, Long](
       mappers, reducers,
       mapper = line => List((math.abs(line.trim.toInt), 1)),
@@ -103,7 +100,6 @@ object Lecture {
         n
       },
       merge = _ + _).run(lines)
-  }
 
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def li(s: SparkSession, dir: String) = Tables.load(s, dir, "lineitem")

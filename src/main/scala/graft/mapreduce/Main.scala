@@ -52,11 +52,7 @@ object Main {
 
     val spark = GraftSession(
       "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-      "spark.app.name" -> "mapreduce",
-      "spark.sql.shuffle.partitions" -> reducers.toString,
-      // deterministic R output files per stage (file-layout parity):
-      // AQE would coalesce small shuffle partitions
-      "spark.sql.adaptive.enabled" -> "false")
+      "spark.app.name" -> "mapreduce")
     if (debug) spark.sparkContext.setLogLevel("INFO")
 
     val result = findIteratively(spark, in, outDir, mappers, reducers,
@@ -65,35 +61,17 @@ object Main {
     spark.stop()
   }
 
-  /** The reference's driver loop (src/main.cpp:61-97) over
-    * [[MapReduceJob.runWithSinks]]; returns the found L, or maxLen + 1
-    * when no candidate length succeeded (Q4 contract). */
+  /** The reference's driver loop (src/main.cpp:61-97): one
+    * [[MinUniquePrefix.uniquePrefixJob]] round per candidate L through
+    * [[MapReduceJob.runWithSinks]] into `outDir/iter<L>/`; returns the found
+    * L, or maxLen + 1 when no candidate length succeeded (Q4 contract). */
   def findIteratively(spark: SparkSession, input: String, outDir: String,
-      mappers: Int, reducers: Int, maxLen: Int, debug: Boolean): Int = {
-    import spark.implicits._
-    var l = 1
-    while (l <= maxLen) {
-      val ll = l
-      val job = MapReduceJob.boolAnd[String](mappers, reducers) { line =>
-        List((line.take(ll), 1)) // prefix projection (src/main.cpp:62-74)
-      } { it =>
-        // sorted-stream duplicate detection (intent of src/main.cpp:75-91)
-        var prev: String = null
-        var ok = true
-        while (it.hasNext) {
-          val (k, c) = it.next()
-          if (c > 1 || k == prev) ok = false
-          prev = k
-        }
-        ok
-      }
-      val found = job.runWithSinks(spark, input, s"$outDir/iter$l", debug)(
-        b => if (b) "1" else "0")
-      if (found) return l
-      l += 1
-    }
-    maxLen + 1
-  }
+      mappers: Int, reducers: Int, maxLen: Int, debug: Boolean): Int =
+    (1 to maxLen).find { l =>
+      MinUniquePrefix.uniquePrefixJob(mappers, reducers, l)
+        .runWithSinks(spark, input, s"$outDir/iter$l", debug)(
+          b => if (b) "1" else "0")
+    }.getOrElse(maxLen + 1)
 
   private val usage: String =
     """usage: graft.mapreduce.Main -i <input file> [options]

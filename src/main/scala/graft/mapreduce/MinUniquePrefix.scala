@@ -115,36 +115,37 @@ object MinUniquePrefix {
     if (dup || ans > maxLen) -1 else ans
   }
 
-  /** Parity form through the generic MapReduce API: the reference's
-    * client mapper (prefix projection, src/main.cpp:62-74) and reducer
-    * (sorted-stream duplicate detection, src/main.cpp:75-91), race-free.
+  /** Parity form through the generic MapReduce API: one
+    * [[uniquePrefixJob]] round per candidate L, stop at the first success.
     */
   def findViaMapReduce(spark: SparkSession, lines: Dataset[String],
       maxLen: Int, mappers: Int = 3, reducers: Int = 2): Int = {
-    import spark.implicits._
     val cached = lines.cache()
-    try {
-      var l = 1
-      while (l <= maxLen) {
-        val ll = l
-        val job = MapReduceJob.boolAnd[String](mappers, reducers) {
-          line => List((line.take(ll), 1))            // main.cpp:64,72
-        } { it =>
-          var prev: String = null                      // intent of main.cpp:76-91
-          var ok = true
-          while (it.hasNext) {
-            val (k, c) = it.next()
-            if (c > 1 || k == prev) ok = false
-            prev = k
-          }
-          ok
-        }
-        if (job.run(cached)) return l
-        l += 1
-      }
-      -1
-    } finally cached.unpersist()
+    try (1 to maxLen).find(l => uniquePrefixJob(mappers, reducers, l).run(cached))
+      .getOrElse(-1)
+    finally cached.unpersist()
   }
+
+  /** The reference's client job for candidate length `l`: prefix
+    * projection mapper (src/main.cpp:62-74) and sorted-stream duplicate
+    * detection reducer (intent of src/main.cpp:75-91), race-free. True
+    * when every `l`-prefix is unique. Shared by [[findViaMapReduce]] and
+    * the CLI driver [[Main.findIteratively]].
+    */
+  def uniquePrefixJob(mappers: Int, reducers: Int,
+      l: Int): MapReduceJob[String, Int, Boolean] =
+    MapReduceJob.boolAnd[String](mappers, reducers) {
+      line => List((line.take(l), 1))
+    } { it =>
+      var prev: String = null
+      var ok = true
+      while (it.hasNext) {
+        val (k, c) = it.next()
+        if (c > 1 || k == prev) ok = false
+        prev = k
+      }
+      ok
+    }
 
   /** Typed-UDAF surface (SURVEY §7 M4): per-prefix occurrence counting as
     * an `Aggregator` over `groupByKey`, uniqueness as the `every`

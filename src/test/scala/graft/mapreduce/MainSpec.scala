@@ -42,7 +42,8 @@ class MainSpec extends SparkSpec {
     val mapperParts = Files.list(Path.of(out, "iter1", "mapper"))
       .iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
       .toSeq
-    assert(mapperParts.nonEmpty)
+    // one sorted run per map task (the 279-byte fixture splits into M=3)
+    assert(mapperParts.size == 3)
     mapperParts.foreach { p =>
       val lines = Files.readAllLines(p).asScala.toList
       assert(lines == lines.sorted, s"mapper run not sorted: $p")
@@ -79,5 +80,20 @@ class MainSpec extends SparkSpec {
     for (l <- 1 to 3)
       assert(Files.readString(
         tmp.resolve("out").resolve(s"iter$l").resolve("result.txt")) == "0")
+  }
+
+  test("empty input file: L = 1 with one empty reduce partition, " +
+      "like MinUniquePrefix.find") {
+    val tmp = Files.createTempDirectory("mrmain")
+    val in = writeFixture(tmp, Nil, trailingNewline = false)
+    val out = tmp.resolve("out")
+    val result = Main.findIteratively(spark, in.toString, out.toString,
+      3, 2, 3, debug = true)
+    assert(result == 1)
+    assert(result == MinUniquePrefix.find(spark.read.textFile(in.toString), 3))
+    assert(Files.readString(out.resolve("iter1").resolve("result.txt")) == "1")
+    val red = Files.list(out.resolve("iter1").resolve("reducer"))
+      .iterator().asScala.toSeq
+    assert(red.map(p => Files.readString(p)) == Seq("1"))
   }
 }

@@ -1,7 +1,8 @@
 package graft.mapreduce
 
 import graft.SparkSpec
-import org.apache.spark.sql.Encoders
+import org.apache.spark.ListenerBusDrain
+import scala.reflect.{ClassTag, classTag}
 
 /** The generic MapReduce API (parity with `otus::PrefixFindRunner`,
   * reference src/mapreduce.hpp:21-81) must express all lecture tasks
@@ -71,8 +72,8 @@ class MapReduceJobSpec extends SparkSpec {
       mapper = line => List((line, 1)),
       reducer = it => List(it.map(_._1).toList),
       merge = _ ++ _)(
-      Encoders.product[(String, Int)],
-      Encoders.kryo[List[List[String]]])
+      Ordering.String, ClassTag(classOf[String]), ClassTag.Int,
+      classTag[List[List[String]]])
     val keys = (1 to 200).map(i => s"k${i % 37}")
     val parts = job.run(spark.createDataset(keys)).filter(_.nonEmpty)
     // each partition ascending
@@ -85,5 +86,58 @@ class MapReduceJobSpec extends SparkSpec {
       "a key appeared in more than one reduce partition")
     // nothing lost
     assert(parts.flatten.sorted == keys.sorted.toList)
+  }
+
+  /** Each reduce partition's keys, in partition order. */
+  private def keysPerPartition(mappers: Int, reducers: Int,
+      keys: Seq[String]): List[List[String]] =
+    new MapReduceJob[String, Int, List[List[String]]](mappers, reducers,
+      mapper = line => List((line, 1)),
+      reducer = it => List(it.map(_._1).toList),
+      merge = _ ++ _).run(spark.createDataset(keys))
+
+  test("range partitions are contiguous in Ordering[String], " +
+      "surrogate-pair and U+E000+ keys included") {
+    // String.compareTo is UTF-16 code-unit order: surrogate pairs
+    // (U+D800-DFFF units) sort below U+E000-FFFF, unlike UTF-8 byte order.
+    val keys = (0 until 240).map { i =>
+      Seq("k", "\uE000", "\uFFFD", "\uD83D\uDE00", "\uD835\uDD38")(i % 5) +
+        (i % 48)
+    }
+    val parts = keysPerPartition(4, 4, keys).filter(_.nonEmpty)
+    assert(parts.size > 1)
+    parts.foreach(p => assert(p == p.sorted, s"partition not sorted: $p"))
+    parts.sliding(2).foreach { case Seq(a, b) =>
+      assert(a.max < b.min, s"ranges overlap: ${a.max} >= ${b.min}")
+    }
+    assert(parts.flatten == keys.sorted)
+  }
+
+  test("one run round launches exactly 2 Spark jobs " +
+      "(range sample, then shuffle + reduce)") {
+    val sc = spark.sparkContext
+    val group = s"mrjob-round-${java.util.UUID.randomUUID}"
+    val keys = (1 to 400).map(i => s"k${i % 97}")
+    sc.setJobGroup(group, "one MapReduceJob round", interruptOnCancel = false)
+    val parts =
+      try keysPerPartition(4, 3, keys)
+      finally sc.clearJobGroup()
+    assert(parts.flatten.size == 400)
+    ListenerBusDrain(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).length == 2)
+  }
+
+  test("empty input: one empty reduce partition, result is reducer(empty)") {
+    val empty = spark.emptyDataset[String]
+    // 1 per reduce partition: exactly one partition, and it is empty
+    val partitions = new MapReduceJob[String, Int, Int](3, 2,
+      mapper = line => List((line, 1)),
+      reducer = it => 1 + it.size,
+      merge = _ + _).run(empty)
+    assert(partitions == 1)
+    assert(Lecture.sumOfSquaresViaMapReduce(spark, empty) == 0L)
+    assert(Lecture.countDistinctAbsViaMapReduce(spark, empty) == 0L)
+    assert(Lecture.wordCountViaMapReduce(spark, empty).count() == 0L)
+    assert(MinUniquePrefix.findViaMapReduce(spark, empty, 3) == 1)
   }
 }
