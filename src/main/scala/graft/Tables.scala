@@ -35,15 +35,14 @@ object Tables {
   }
 
   /** Cheap on-disk content fingerprint of a table (file names, lengths,
-    * mtimes — no Spark job, no data read). Build-once/query-many memos
-    * (the IVF/k-means/bloom/perceptron family) key on THIS rather than
-    * the bare dir string, so a table regenerated on disk under the same
-    * path gets a fresh key instead of silently reusing a stale model or
-    * filter (an r10-advice stale-memo hazard: a stale eval-slice bloom
-    * would drop train grams as false negatives, breaking the lossless
-    * guarantee). A path that does not exist (spec fixtures keyed by
-    * synthetic names) folds to a stable `#absent` key, preserving
-    * in-process memo reuse for fixtures. */
+    * mtimes — no Spark job, no data read). [[Memo]] keys on THIS rather
+    * than the bare dir string, so a table regenerated on disk under the
+    * same path gets a fresh key instead of silently reusing a stale
+    * model or filter (a stale eval-slice bloom would drop train grams as
+    * false negatives, breaking the lossless guarantee). A path that does
+    * not exist (spec fixtures keyed by synthetic names) folds to a
+    * stable `#absent` key, preserving in-process memo reuse for
+    * fixtures. */
   def fingerprint(dir: String, name: String): String = {
     // listFiles returns null on an I/O error or when the directory
     // vanishes between exists() and the walk (a concurrent table
@@ -59,24 +58,6 @@ object Tables {
     else walk(root)
       .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       .mkString(s"$dir/$name.parquet#", ",", "")
-  }
-
-  /** computeIfAbsent on a [[fingerprint]]-keyed memo that EVICTS stale
-    * entries for the same table path once a fresh fingerprint commits:
-    * the key prefix before `#` identifies the table, so after a table
-    * regeneration the superseded model/filter entry is dropped instead
-    * of accumulating for the JVM's life (r11 advice — a long-lived
-    * driver regenerating tables would otherwise leak one stale weight
-    * map / ~128 KB bloom array per regeneration). At most one live
-    * entry per table path; concurrent readers of the old key simply
-    * recompute. */
-  def memoFresh[V](memo: java.util.concurrent.ConcurrentHashMap[String, V],
-      key: String)(compute: String => V): V = {
-    val v = memo.computeIfAbsent(key, k => compute(k))
-    val prefix = key.takeWhile(_ != '#')
-    memo.keySet.removeIf(k =>
-      k != key && k.takeWhile(_ != '#') == prefix)
-    v
   }
 
   /** ns-long `ts` → TimestampType(µs); floor semantics match DuckDB's

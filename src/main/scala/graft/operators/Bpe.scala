@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.{Memo, Q, Tables}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Real byte-pair-encoding merge learning over the corpus vocabulary —
@@ -134,20 +134,20 @@ object Bpe {
       merges: Seq[(String, String)], outCol: String): DataFrame =
     df.withColumn(outCol, applyFold(col(wordCol), merges))
 
-  /** Merge tables memoized per (data dir, steps) for the tokenize
-    * query — the build-once / tokenize-many split, exactly
-    * `Similarity.centroidCache`'s discipline (and its immutable-dir
-    * assumption): repeated tokenize runs measure tokenization, not
-    * index build. `text_bpe_merges` deliberately does NOT use the memo
-    * — its measured cost IS the learn loop. */
-  private val mergesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]()
+  /** The 8-step merge table per documents table for the tokenize and
+    * fertility queries — the build-once / tokenize-many split: repeated
+    * tokenize runs measure tokenization, not index build.
+    * `text_bpe_merges` deliberately does NOT use the memo — its measured
+    * cost IS the learn loop. The learn runs on its OWN read (see
+    * ann_ivf_int on shared-fragment execution). */
+  private[operators] val mergesMemo =
+    new Memo[Seq[(Int, String, String, Long)]]
 
-  /** Test hook: the memoized merge table for (dir, steps), if built —
-    * lets BpeSpec pin that the memo equals a fresh learn. */
-  def cachedMerges(dir: String, steps: Int)
-      : Option[Seq[(Int, String, String, Long)]] =
-    Option(mergesCache.get(s"$dir#$steps"))
+  private def memoMerges(s: SparkSession, dir: String)
+      : Seq[(String, String)] =
+    mergesMemo(dir, "documents", "steps8")(learnMerges(
+      Tables.load(s, dir, "documents").select(col("text")), steps = 8))
+      .map(m => (m._2, m._3))
 
   /** Generated DuckDB mirror of [[learnMerges]]: the SAME vocab
     * aggregate, then `steps` chained CTE blocks each replicating one
@@ -269,16 +269,12 @@ object Bpe {
     //      stream re-segmented by the learned merge table, pinned by
     //      an md5 over the full in-order symbol stream (any wrong
     //      merge, order, or boundary changes the hash). The merge
-    //      table is memoized per dir (build-once/tokenize-many, the
-    //      ann_ivf discipline) so the measured cost is tokenization:
+    //      table is memoized per documents table (build-once/tokenize-many, the
+    //      ann_ivf discipline), so the measured cost is tokenization:
     //      a pure narrow per-doc fold — no join, no shuffle beyond
-    //      the output sort. The learn runs on its OWN read (see
-    //      ann_ivf_int on shared-fragment execution). ----
+    //      the output sort. ----
     Q("text_bpe_tokenize", Some(sqlBpeTokenize(steps = 8))) { (s, dir) =>
-      val merges = mergesCache.computeIfAbsent(s"$dir#8",
-        _ => learnMerges(
-          Tables.load(s, dir, "documents").select(col("text")), steps = 8))
-        .map(m => (m._2, m._3))
+      val merges = memoMerges(s, dir)
       Tables.spread(Tables.load(s, dir, "documents"), col("doc_id"))
         .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
         .select(col("doc_id"),
@@ -300,10 +296,7 @@ object Bpe {
     //      aggregate. Ratio in exact integer ppm — no float division
     //      near the hash. ----
     Q("text_bpe_fertility", Some(sqlBpeFertility(steps = 8))) { (s, dir) =>
-      val merges = mergesCache.computeIfAbsent(s"$dir#8",
-        _ => learnMerges(
-          Tables.load(s, dir, "documents").select(col("text")), steps = 8))
-        .map(m => (m._2, m._3))
+      val merges = memoMerges(s, dir)
       Tables.load(s, dir, "documents")
         .select(col("lang"), split(col("text"), "\\s+").as("toks"))
         .select(col("lang"), size(col("toks")).cast("long").as("nw"),

@@ -741,7 +741,7 @@ object Crawl {
     * giant ones. Record→segment assignment (doc_id % n) is invisible
     * to every output: no reader exposes file names, the oracle reads
     * the same bytes by glob, and record sets are compared sorted. */
-  private val FixtureFiles = 32
+  private[operators] val FixtureFiles = 32
 
   /** Deterministic HTML page around a document's text: head noise
     * (title/style/script), nav + heading + footer boilerplate, a
@@ -826,13 +826,30 @@ object Crawl {
       writeArchivesWithNow(s, dir, rootDir)(payloadOf)
     }
 
-  private def writeArchivesWithNow(s: SparkSession, dir: String,
-      rootDir: String)(payloadOf: (Long, String) => String): Unit = {
+  /** Create `rootDir` and delete its `part<N><ext>` segments for each
+    * of `exts`, so a rewrite leaves exactly the segments it writes: a
+    * stale segment from an earlier, wider layout would otherwise be
+    * read by both the reader and the glob-based oracle. Other files are
+    * not ours to delete (the [[isOwnShard]] rule). */
+  private def clearedSegmentRoot(rootDir: String,
+      exts: String*): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(rootDir)
+    java.nio.file.Files.createDirectories(root)
+    val own = exts.map(e =>
+      s"part\\d+${java.util.regex.Pattern.quote(e)}".r)
+    Option(root.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isFile && own.exists(_.matches(f.getName)))
+      .foreach(f => java.nio.file.Files.delete(f.toPath))
+    root
+  }
+
+  private[operators] def writeArchivesWithNow(s: SparkSession,
+      dir: String, rootDir: String)(
+      payloadOf: (Long, String) => String): Unit = {
     val rows = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .orderBy("doc_id").collect()
-    val root = java.nio.file.Paths.get(rootDir)
-    java.nio.file.Files.createDirectories(root)
+    val root = clearedSegmentRoot(rootDir, ".garc")
     (0 until FixtureFiles).foreach { f =>
       val recs = rows.iterator
         .filter(_.getLong(0) % FixtureFiles == f)
@@ -917,14 +934,16 @@ object Crawl {
     * `doc_id*8 + variant` so first-crawled-wins is checkable from
     * the id algebra alone. */
   def writeUrlArchives(s: SparkSession, dir: String): Unit =
-    writeOnce(UrlFixtureRoot, dir) { writeUrlArchivesNow(s, dir) }
+    writeOnce(UrlFixtureRoot, dir) {
+      writeUrlArchivesNow(s, dir, UrlFixtureRoot)
+    }
 
-  private def writeUrlArchivesNow(s: SparkSession, dir: String): Unit = {
+  private[operators] def writeUrlArchivesNow(s: SparkSession, dir: String,
+      rootDir: String): Unit = {
     val rows = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"))
       .orderBy("doc_id").collect()
-    val root = java.nio.file.Paths.get(UrlFixtureRoot)
-    java.nio.file.Files.createDirectories(root)
+    val root = clearedSegmentRoot(rootDir, ".garc")
     (0 until FixtureFiles).foreach { f =>
       val recs = rows.iterator.filter(_.getLong(0) % FixtureFiles == f)
         .flatMap { r =>
@@ -1069,14 +1088,16 @@ object Crawl {
     * payload text sanitized to printable ASCII so the raw twin's
     * character positions equal byte offsets for the oracle walk. */
   def writeWarcArchives(s: SparkSession, dir: String): Unit =
-    writeOnce(WarcFixtureRoot, dir) { writeWarcArchivesNow(s, dir) }
+    writeOnce(WarcFixtureRoot, dir) {
+      writeWarcArchivesNow(s, dir, WarcFixtureRoot)
+    }
 
-  private def writeWarcArchivesNow(s: SparkSession, dir: String): Unit = {
+  private[operators] def writeWarcArchivesNow(s: SparkSession,
+      dir: String, rootDir: String): Unit = {
     val rows = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .orderBy("doc_id").collect()
-    val root = java.nio.file.Paths.get(WarcFixtureRoot)
-    java.nio.file.Files.createDirectories(root)
+    val root = clearedSegmentRoot(rootDir, ".warc", ".warc.gz")
     def recId(n: Long): String =
       f"<urn:uuid:00000000-0000-4000-8000-$n%012d>"
     (0 until FixtureFiles).foreach { f =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -909,16 +909,13 @@ object Dedup {
     * which `spark.catalog.clearCache()` does NOT release (catalog
     * clears only touch Dataset/SQL caches), so the share survives the
     * harnesses' between-query cache clears by design rather than by
-    * accident of cache state. Footprint is one slim label set per dir.
-    * Same immutable-input-dir assumption as `Similarity.centroidCache`;
-    * data regenerated in place at the same path would need an explicit
-    * eviction here. */
-  private val componentCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * accident of cache state. Footprint is one slim label set per
+    * documents table. */
+  private val componentMemo = new Memo[DataFrame]
 
   private def jaccardComponentLabels(s: SparkSession, dir: String)
       : DataFrame =
-    componentCache.computeIfAbsent(dir, _ =>
+    componentMemo(dir, "documents", "jaccard-0.9")(
       connectedComponents(
         exactJaccardPairs(docs(s, dir), maxId = 300, threshold = 0.9)))
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,20 +160,15 @@ object KnLm {
         expr("nll_q10 div n_bigrams").cast("long"))
   }
 
-  /** [[knLogprob]] with the bigram model memoized per data dir (the
-    * same fingerprint discipline as [[memoKn5]], variant
-    * `heldout-bigram`): all four model planes become eager
+  /** [[knLogprob]] with the bigram model memoized per documents table
+    * (variant `heldout-bigram`): all four model planes become eager
     * checkpoints, so `text_kn_logprob` / `pipeline_ppl_buckets` pay
     * only the eval-side scoring per invocation. */
-  private val kn2Memo =
-    new java.util.concurrent.ConcurrentHashMap[String, BigramModel]()
+  private val kn2Memo = new Memo[BigramModel]
 
   private def knLogprobMemo(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val fp = Tables.fingerprint(dir, "documents")
-    val i = fp.indexOf('#')
-    val key = s"${fp.substring(0, i)}@heldout-bigram#${fp.substring(i + 1)}"
-    val mdl = Tables.memoFresh(kn2Memo, key) { _ =>
+    val mdl = kn2Memo(dir, "documents", "heldout-bigram") {
       def ck(df: DataFrame): DataFrame = df.localCheckpoint()
       val m0 = bigramModelFrom(
         TextAnalysis.bigramRows(d.where(col("doc_id") % 5 =!= 0),
@@ -326,7 +321,7 @@ object KnLm {
     * reusable leaf: build once, score many — the checkpointed blocks
     * survive `spark.catalog.clearCache()` (the
     * [[Dedup.connectedComponents]] component-cache precedent), so the
-    * [[memoKn5]] share holds across the harnesses' between-query cache
+    * [[kn5Memo]] share holds across the harnesses' between-query cache
     * clears. A 100 TB deployment writes these same planes to durable
     * storage once per reference-corpus refresh (same DAG, durable
     * edges). */
@@ -349,32 +344,10 @@ object KnLm {
       ck(ctxCounts(c3, 3)), ck(ctxCounts(c4, 4)), ck(ctxCounts(c5, 5)))
   }
 
-  /** Per-fingerprint model memo (the [[QualityTrained]] perceptron /
-    * [[TextAnalysis]] bloom discipline, r12 verdict item: every OTHER
-    * trained artifact was fingerprint-memoized; the kn5 chain retrained
-    * per invocation — the heaviest query in the inventory paid the full
-    * 5-gram build on every run). The key folds the train-corpus VARIANT
-    * (heldout / canon / ref) into [[Tables.memoFresh]]'s table-identity
-    * prefix, so each variant holds its own entry and a regenerated
-    * table on disk evicts only its own stale model. */
-  private val kn5Memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Kn5Model]()
-
-  /** Spec window into the memo (KnLmSpec's lifecycle contract): the
-    * live key set — one entry per (table identity, variant) at most,
-    * with superseded fingerprints evicted. */
-  private[operators] def kn5MemoKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    kn5Memo.keySet.asScala.toSet
-  }
-
-  private def memoKn5(dir: String, variant: String)(
-      build: => Kn5Model): Kn5Model = {
-    val fp = Tables.fingerprint(dir, "documents")
-    val i = fp.indexOf('#')
-    val key = s"${fp.substring(0, i)}@$variant#${fp.substring(i + 1)}"
-    Tables.memoFresh(kn5Memo, key)(_ => build)
-  }
+  /** The 5-gram model per documents table and train-corpus variant
+    * (heldout / canon / ref): each variant holds its own entry, and a
+    * regenerated table evicts only its own stale model. */
+  private[operators] val kn5Memo = new Memo[Kn5Model]
 
   /** Score every doc of `eval` under a prebuilt model — the apply side
     * of the two-corpus split. All joins vocab-plane equijoins
@@ -423,7 +396,7 @@ object KnLm {
     * scoring equijoins. */
   private def kn5LogprobMemo(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val m = memoKn5(dir, "heldout")(
+    val m = kn5Memo(dir, "documents", "heldout")(
       buildKn5Model(d.where(col("doc_id") % 5 =!= 0)))
     kn5ScoreWith(m, d.where(col("doc_id") % 5 === 0))
   }
@@ -468,8 +441,8 @@ object KnLm {
     * memoization gap. The canon plane is a pure function of the
     * `documents` table, so the table fingerprint keys the model. */
   def pplGateMemo(dir: String): DataFrame => DataFrame =
-    canon => pplGateWith(memoKn5(dir, "canon")(buildKn5Model(canon)),
-      canon)
+    canon => pplGateWith(
+      kn5Memo(dir, "documents", "canon")(buildKn5Model(canon)), canon)
 
   /** The GENUINELY two-corpus composed gate
     * (`pipeline_full_prepare_ppl_ref`) — production CCNet's exact
@@ -481,7 +454,8 @@ object KnLm {
     val s = canon.sparkSession
     val train = TextAnalysis.canonicalized(TextAnalysis.scrubbed(
       docs(s, dir).where(col("source").isin(TrustedSources: _*))))
-    pplGateWith(memoKn5(dir, "ref-canon")(buildKn5Model(train)), canon)
+    pplGateWith(
+      kn5Memo(dir, "documents", "ref-canon")(buildKn5Model(train)), canon)
   }
 
   /** [[pplGateRefMemo]] with the trusted slice DECONTAMINATED first
@@ -509,7 +483,8 @@ object KnLm {
           col("doc_id") % 10 =!= 0)
         .join(contaminated.hint("shuffle_hash"), Seq("doc_id"),
           "left_anti")))
-    pplGateWith(memoKn5(dir, "refd-canon")(buildKn5Model(train)), canon)
+    pplGateWith(
+      kn5Memo(dir, "documents", "refd-canon")(buildKn5Model(train)), canon)
   }
 
   private def pplGateWith(m: Kn5Model, canon: DataFrame): DataFrame = {
@@ -859,7 +834,7 @@ object KnLm {
     //      planes fingerprint-memoized under the `ref` variant. ----
     Q("text_kn5_logprob_ref", Some(sqlKn5LogprobRef)) { (s, dir) =>
       val d = docs(s, dir)
-      val m = memoKn5(dir, "ref")(
+      val m = kn5Memo(dir, "documents", "ref")(
         buildKn5Model(d.where(col("source").isin(TrustedSources: _*))))
       kn5ScoreWith(m, d.where(!col("source").isin(TrustedSources: _*)))
         .orderBy("doc_id")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -114,29 +114,16 @@ object NbLangid {
     m
   }
 
-  /** Per-dir memo of the model trained on the labeled `% 5 ≠ 0` split
-    * — the [[KnLm.memoKn5]] fingerprint discipline: `text_nb_langid`
-    * and `pipeline_crawl_prepare_langid` share one entry per table
-    * generation; a regenerated table evicts only its own stale
-    * model. */
-  private val nbMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, NbModel]()
-
-  /** Spec window (the [[KnLm.kn5MemoKeys]] lifecycle discipline). */
-  private[operators] def nbMemoKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    nbMemo.keySet.asScala.toSet
-  }
+  /** The model trained on the labeled `% 5 ≠ 0` split:
+    * `text_nb_langid` and `pipeline_crawl_prepare_langid` share one
+    * entry per documents table generation. */
+  private[operators] val nbMemo = new Memo[NbModel]
 
   private def memoModel(s: org.apache.spark.sql.SparkSession,
-      dir: String): NbModel = {
-    val fp = Tables.fingerprint(dir, "documents")
-    val i = fp.indexOf('#')
-    val key = s"${fp.substring(0, i)}@nb#${fp.substring(i + 1)}"
-    Tables.memoFresh(nbMemo, key)(_ =>
+      dir: String): NbModel =
+    nbMemo(dir, "documents", "nb")(
       buildModel(Tables.load(s, dir, "documents")
         .where(col("doc_id") % 5 =!= 0)))
-  }
 
   /** The per-word score plane: one row per TRAIN-VOCAB word carrying
     * `__wm` = map(lang → ilog_w) with ≤|langs| entries — the single

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -27,7 +27,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * fixed at 257 weights (256 buckets + bias) independent of vocabulary,
   * so each epoch is one broadcast-weight scoring pass + one per-bucket
   * aggregate whose driver sync is ≤ 257 rows (the
-  * kmeans/trainCentroids bounded-sync precedent; memoized per dir).
+  * kmeans/trainCentroids bounded-sync precedent; memoized per table).
   * The oracle replays the identical bounded-epoch update loop as
   * unrolled CTEs (the UnigramLm discipline). */
 object QualityTrained {
@@ -79,16 +79,9 @@ object QualityTrained {
       .groupBy("doc_id")
       .agg(sum(coalesce(col("wt"), lit(0L)) * col("tf")).as("score"))
 
-  /** One JVM-wide trained-weight memo per data dir (the ivf/kmeans
-    * build-once/query-many discipline): training runs its bounded
-    * driver syncs once; repeated bench passes measure SCORING. Keyed
-    * on [[graft.Tables.fingerprint]] of the source table, not the bare
-    * dir string, so a documents table regenerated on disk retrains
-    * instead of silently scoring with stale weights (r10 advice);
-    * fixture keys with no backing path fold to a stable `#absent`
-    * fingerprint and keep reusing the memo in-process. */
-  private val weightMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, Long]]()
+  /** Trained weights per documents table: training runs its bounded
+    * driver syncs once; repeated bench passes measure SCORING. */
+  private val weightMemo = new Memo[Map[Long, Long]]
 
   /** Batch-perceptron training on the `% 5 ≠ 0` split: Epochs passes,
     * each one scoring join + one misclassified-update aggregate with
@@ -125,8 +118,7 @@ object QualityTrained {
 
   private def memoWeights(s: SparkSession, d: DataFrame,
       dir: String): Map[Long, Long] =
-    graft.Tables.memoFresh(weightMemo,
-      graft.Tables.fingerprint(dir, "documents"))(_ => trainWeights(s, d))
+    weightMemo(dir, "documents", "perceptron")(trainWeights(s, d))
 
   /** Held-out (doc_id, y, score) under the memoized trained weights —
     * the shared front of the confusion matrix and the PR curve. */

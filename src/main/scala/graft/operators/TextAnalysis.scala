@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -153,16 +153,10 @@ object TextAnalysis {
       |SELECT DISTINCT doc_id, eval_suite FROM hits WHERE n_shared >= 3
       |ORDER BY doc_id, eval_suite""".stripMargin
 
-  /** Per-dir memo of the eval-side gram bloom filter (build once,
-    * probe many — the persisted-index discipline; Spark's own runtime
-    * filter rebuilds per query, a production pipeline would not).
-    * Keyed on [[graft.Tables.fingerprint]] of the source table, not the
-    * bare dir string: a documents table regenerated on disk invalidates
-    * the memo (a stale eval bloom would drop now-matching train grams
-    * as false negatives — the one failure mode the lossless-prune
-    * guarantee cannot tolerate). */
-  private val bloomMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
+  /** The eval-side gram bloom filter, built once per documents table
+    * and probed many times (Spark's own runtime filter rebuilds per
+    * query, a production pipeline would not). */
+  private val bloomMemo = new Memo[Array[Byte]]
 
   /** BLOOM-PRUNED decontamination — result-identical to
     * [[decontaminatePairs]] (same oracle!), with the train-side gram
@@ -189,8 +183,7 @@ object TextAnalysis {
   def decontaminateBloomPairs(d: DataFrame, dirKey: String): DataFrame = {
     val bg = ngramRows(d, 5, distinctPerDoc = true)
     val evalBg = bg.where(col("doc_id") % 10 === 0)
-    val bf = graft.Tables.memoFresh(bloomMemo,
-      graft.Tables.fingerprint(dirKey, "documents"))(_ =>
+    val bf = bloomMemo(dirKey, "documents", "eval-bloom")(
       evalBg.agg(expr(
         s"bloom_filter_agg(xxhash64(g), ${1L << 16}L, ${1L << 20}L)")
         .as("bf"))

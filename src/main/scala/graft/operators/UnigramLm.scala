@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -344,11 +344,11 @@ object UnigramLm {
        |FROM d ORDER BY doc_id""".stripMargin
   }
 
-  /** Trained-model memo per data dir for the APPLY query — the
-    * build-once/tokenize-many split ([[Bpe]]'s mergesCache
-    * discipline); `text_unigram_lm` itself never reads this. */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], Seq[Long])]()
+  /** Trained model per documents table for the APPLY queries — the
+    * build-once/tokenize-many split; `text_unigram_lm` itself never
+    * reads this. */
+  private val trainMemo =
+    new Memo[(Seq[(String, Long, Long)], Seq[Long])]
 
   val queries: Seq[Q] = Seq(
 
@@ -375,7 +375,7 @@ object UnigramLm {
     //      doc tokens via hotSaltedJoin (Zipf words against 1-row
     //      segmentations — the aggregate-fed join shape), reassembled
     //      per doc with an md5 over the in-order piece stream. The
-    //      model is memoized per dir (build-once/tokenize-many), so
+    //      model is memoized per table (build-once/tokenize-many), so
     //      the measured cost is segmentation + attach, not training.
     //      Scale: the DP never runs per corpus token — only per
     //      DISTINCT word; the corpus-scale stages are one explode and
@@ -419,8 +419,8 @@ object UnigramLm {
     * doc-logprob queries (build-once/segment-many memo per dir). */
   private def segmentedTokens(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val (ps, _) = trainCache.computeIfAbsent(dir,
-      _ => train(Tables.load(s, dir, "documents").select(col("text"))))
+    val (ps, _) = trainMemo(dir, "documents", "unigram")(
+      train(Tables.load(s, dir, "documents").select(col("text"))))
     val scF = ps.map(p => p._1 -> p._3).toMap
     val docs = Tables.load(s, dir, "documents")
     val wf = docs

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -132,9 +132,9 @@ object StreamQueries {
           length(col("text")).cast("long").as("v"))
       val bkt = Bucketing(DeltaIndex.NumBuckets, Seq("doc_id"))
       val init = DeltaIndex.asOps(d.limit(0), "u", -1L)
-      val idx = chainCache.computeIfAbsent(dir, { _ =>
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_vchain").toString
+      val idx = chainMemo(dir, "documents", "vchain") {
+        val root = java.nio.file.Files.createTempDirectory("graft_vchain")
+        sys.addShutdownHook(deleteRecursively(root))
         val p = s"$root/chain"
         def fold(st: DataFrame): DataFrame =
           DeltaIndex.resolveLatestOps(st, Seq("doc_id"))
@@ -168,7 +168,7 @@ object StreamQueries {
           .withColumn("v", lit(null).cast("long")), "d",
           DeltaIndex.deleteSeq(4)))
         p
-      })
+      }
       // the pruned probe read: only the buckets the probe keys
       // (doc_id % 3) hash to are listed/scanned
       val probe = d.where(col("doc_id") % 3 === 0).select("doc_id")
@@ -181,11 +181,10 @@ object StreamQueries {
     }
   )
 
-  /** `stream_resolve_pruned`'s per-(JVM, sfDir) fixture chain —
-    * built once, read by every pass (identical commits every build;
-    * the dedup_components memoized-construction precedent). */
-  private val chainCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** `stream_resolve_pruned`'s fixture chain per documents table —
+    * built once into a temp dir that is deleted when the JVM exits,
+    * read by every pass (identical commits every build). */
+  private val chainMemo = new Memo[String]
 
   /** BENCH-ONLY timed measurement of the versioned-chain WRITE path
     * (r19 — r18 verdict task 7: memoizing `stream_resolve_pruned`'s

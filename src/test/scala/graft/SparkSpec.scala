@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +30,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** sf0.01 fixture dir (~60k lineitem rows; the oracle scale — used by
     * suites that need the real data distribution, not just tiny rows). */
   val sf01Dir = s"$testdataRoot/sf0.01"
+
+  /** Run `f` on a fresh temp dir, deleted (recursively) afterwards. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally {
+      val walk = Files.walk(dir)
+      try walk.sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+  }
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM (getOrCreate); don't stop.

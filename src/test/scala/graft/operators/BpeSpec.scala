@@ -156,12 +156,42 @@ class BpeSpec extends SparkSpec {
     val a = q(spark, sfDir).collect().toSeq
     val b = q(spark, sfDir).collect().toSeq
     assert(a == b)
-    // memoized learn must equal a fresh learn (cache can't go stale on
-    // an immutable dir)
+    // memoized learn must equal a fresh learn
     val fresh = Bpe.learnMerges(
       graft.Tables.load(spark, sfDir, "documents").select(col("text")),
       steps = 8)
-    assert(Bpe.cachedMerges(sfDir, 8).contains(fresh))
+    assert(Bpe.mergesMemo(sfDir, "documents", "steps8")(
+      fail("the tokenize query must have memoized the table")) == fresh)
+  }
+
+  test("text_bpe_tokenize relearns when the documents table is " +
+      "rewritten in place under the same dir") {
+    val q = graft.SparkEntry.queries("text_bpe_tokenize")
+    val src = graft.Tables.load(spark, sfDir, "documents")
+      .where(col("doc_id") < 120)
+    def learn(d: org.apache.spark.sql.DataFrame) =
+      Bpe.learnMerges(d.select(col("text")), steps = 8)
+    // the second generation reverses every text, so its merge table
+    // differs from the first one's
+    val gen1 = src
+    val gen2 = src.withColumn("text", reverse(col("text")))
+    assert(learn(gen1) != learn(gen2))
+    withTempDir("bpe_regen") { dir =>
+      withTempDir("bpe_fresh") { freshDir =>
+        def write(d: org.apache.spark.sql.DataFrame, to: String): Unit =
+          d.write.mode("overwrite").parquet(s"$to/documents.parquet")
+        write(gen1, dir)
+        q(spark, dir).collect()
+        write(gen2, dir)
+        write(gen2, freshDir)
+        val got = q(spark, dir).collect().toSeq
+        val want = q(spark, freshDir).collect().toSeq
+        assert(got.size == want.size)
+        val stale = got.zip(want).count(p => p._1 != p._2)
+        assert(stale == 0, s"of ${want.size} rows: the rewritten table " +
+          "must be tokenized with its own merges")
+      }
+    }
   }
 
   test("applyFold keeps empty words as empty symbol arrays (split " +

@@ -829,4 +829,31 @@ class CrawlSpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSeq
     assert(rt == direct)
   }
+
+  test("archive fixture rewrites clear their own stale part segments " +
+      "and nothing else") {
+    import java.nio.file.{Files, Paths}
+    val writers: Seq[(String, Seq[String], String => Unit)] = Seq(
+      ("garc", Seq(".garc"), root =>
+        Crawl.writeArchivesWithNow(spark, sfDir, root)((_, t) => t)),
+      ("url", Seq(".garc"), Crawl.writeUrlArchivesNow(spark, sfDir, _)),
+      ("warc", Seq(".warc", ".warc.gz"),
+        Crawl.writeWarcArchivesNow(spark, sfDir, _)))
+    for ((name, exts, write) <- writers)
+      withTempDir("crawl_stale") { root =>
+        val stale =
+          exts.map(e => Paths.get(root, s"part${Crawl.FixtureFiles}$e"))
+        val foreign = Paths.get(root, "notes.txt")
+        (stale :+ foreign).foreach(Files.writeString(_, "stale"))
+        write(root)
+        stale.foreach(p => assert(!Files.exists(p), s"$name kept $p"))
+        assert(Files.exists(foreign), s"$name deleted a file not its own")
+        for (e <- exts) {
+          val parts = Paths.get(root).toFile.list()
+            .count(n => n.startsWith("part") && n.endsWith(e) &&
+              !n.stripSuffix(e).contains('.'))
+          assert(parts == Crawl.FixtureFiles, s"$name$e: $parts segments")
+        }
+      }
+  }
 }

@@ -207,13 +207,13 @@ class KnLmSpec extends SparkSpec {
     buildBoth()
     val genOne = blocks
     assert(genOne > base, "a built model must pin checkpointed planes")
-    val keys1 = KnLm.kn5MemoKeys.filter(_.contains(dir))
+    val keys1 = KnLm.kn5Memo.keys.filter(_.contains(dir))
     assert(keys1.size == 2,
       s"one live entry per variant for this dir: $keys1")
     // REGENERATE the table on disk: fresh fingerprint, both variants
     writeDocs("b")
     buildBoth()
-    val keys2 = KnLm.kn5MemoKeys.filter(_.contains(dir))
+    val keys2 = KnLm.kn5Memo.keys.filter(_.contains(dir))
     assert(keys2.size == 2 &&
       keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
       s"superseded fingerprints must be evicted per variant: " +

@@ -140,11 +140,11 @@ class NbLangidSpec extends SparkSpec {
     NbLangid.routeMemo(spark, dir, evalDocs).collect()
     val genOne = blocks
     assert(genOne > base, "a built model must pin checkpointed planes")
-    val keys1 = NbLangid.nbMemoKeys.filter(_.contains(dir))
+    val keys1 = NbLangid.nbMemo.keys.filter(_.contains(dir))
     assert(keys1.size == 1, s"one live entry per dir: $keys1")
     writeDocs("b")
     NbLangid.routeMemo(spark, dir, evalDocs).collect()
-    val keys2 = NbLangid.nbMemoKeys.filter(_.contains(dir))
+    val keys2 = NbLangid.nbMemo.keys.filter(_.contains(dir))
     assert(keys2.size == 1 &&
       keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
       s"superseded fingerprint must be evicted: $keys1 -> $keys2")
