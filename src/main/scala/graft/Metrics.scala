@@ -1,10 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.{ListenerBusDrain, SparkContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec,
+  ShuffleExchangeLike}
 
 /** Post-execution plan observability: per-query shuffle volumes read
   * straight off the executed plan's SQLMetrics — the numbers an operator
@@ -15,6 +21,10 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
   * the SAME DataFrame instance (metrics live on its executed plan).
   * `graft.Explain --run <query>` executes the audited plan and prints
   * this summary; tests assert on it directly (MetricsSpec).
+  *
+  * [[record]] is the per-run view Bench writes: the Spark jobs one query
+  * launches, split by when (while its DataFrame is built, or in the
+  * action) and labelled by the stage that launched them ([[labelled]]).
   */
 object Metrics {
 
@@ -27,12 +37,16 @@ object Metrics {
     * cached subplans (`InMemoryTableScanExec` is a leaf whose
     * `relation.cachedPlan` holds the exchanges that populate the cache —
     * without descending, every shuffle behind a `.cache()` is invisible
-    * and a query's measured volume understates what actually ran). */
+    * and a query's measured volume understates what actually ran) and
+    * behind reused exchanges (a `ReusedExchangeExec` is a leaf pointing
+    * at the exchange that ran — whose own site AQE may since have pruned
+    * from the final plan, e.g. a branch that turned out empty). */
   private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
     val children = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case s: QueryStageExec        => Seq(s.plan)
       case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case r: ReusedExchangeExec    => Seq(r.child)
       case other                    => other.children
     }
     p +: children.flatMap(allNodes)
@@ -74,5 +88,90 @@ object Metrics {
       exchanges = groups.size,
       recordsWritten = maxOf("shuffleRecordsWritten"),
       bytesWritten = maxOf("shuffleBytesWritten"))
+  }
+
+  /** One run of a query: wall seconds of build + action, the jobs
+    * launched while the DataFrame was built (eager checkpoints, memo
+    * builds, fixture writes), the shuffle bytes all its jobs wrote, and
+    * one `(label, milliseconds)` entry per job. A job's label is its job
+    * description (the stage labels set with [[labelled]]), or `build` /
+    * `action` when none is set. */
+  final case class RunRecord(seconds: Double, jobsAtBuild: Int,
+      shuffleWriteBytes: Long, jobs: Seq[(String, Long)]) {
+    def jobSeconds: Map[String, Double] =
+      jobs.groupMapReduce(_._1)(_._2)(_ + _).map { case (l, ms) =>
+        l -> ms / 1e3
+      }
+  }
+
+  private val GroupKey = "spark.jobGroup.id"
+  private val DescriptionKey = "spark.job.description"
+
+  /** Runs `body` with the job description set to `label`, so every job
+    * it launches carries that label into [[RunRecord.jobs]]; the caller's
+    * description is restored afterwards. */
+  def labelled[T](spark: SparkSession, label: String)(body: => T): T =
+    withProperty(spark.sparkContext, DescriptionKey, label)(body)
+
+  private def withProperty[T](sc: SparkContext, key: String,
+      value: String)(body: => T): T = {
+    val caller = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, value)
+    try body finally sc.setLocalProperty(key, caller)
+  }
+
+  /** Builds a query with `build` and runs `action` on it, each under a job
+    * group of its own (`<name>/build`, `<name>/action`), and reads the
+    * jobs of both groups back into a [[RunRecord]]. The caller's job
+    * group and description are left as they were. */
+  def record(spark: SparkSession, name: String)(build: => DataFrame)(
+      action: DataFrame => Unit): RunRecord = {
+    val sc = spark.sparkContext
+    val log = new JobLog(name)
+    sc.addSparkListener(log)
+    try {
+      val t0 = System.nanoTime()
+      val df = withProperty(sc, GroupKey, s"$name/build")(build)
+      withProperty(sc, GroupKey, s"$name/action")(action(df))
+      val seconds = (System.nanoTime() - t0) / 1e9
+      ListenerBusDrain(sc)
+      log.synchronized {
+        RunRecord(seconds, log.atBuild, log.shuffleBytes, log.done.toSeq)
+      }
+    } finally sc.removeSparkListener(log)
+  }
+
+  /** The jobs of one [[record]] run, filled on the listener-bus thread. */
+  private final class JobLog(name: String) extends SparkListener {
+    private val started = mutable.Map.empty[Int, (String, Long)]
+    private val stages = mutable.Set.empty[Int]
+    val done = mutable.ArrayBuffer.empty[(String, Long)]
+    var atBuild = 0
+    var shuffleBytes = 0L
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val p = e.properties
+      val group = if (p == null) null else p.getProperty(GroupKey)
+      if (group == s"$name/build" || group == s"$name/action") {
+        val phase = group.substring(name.length + 1)
+        if (phase == "build") atBuild += 1
+        started(e.jobId) =
+          (Option(p.getProperty(DescriptionKey)).getOrElse(phase), e.time)
+        stages ++= e.stageIds
+      }
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      started.remove(e.jobId).foreach { case (label, t0) =>
+        done += label -> (e.time - t0)
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val info = e.stageInfo
+        if (stages(info.stageId) && info.taskMetrics != null)
+          shuffleBytes += info.taskMetrics.shuffleWriteMetrics.bytesWritten
+      }
   }
 }

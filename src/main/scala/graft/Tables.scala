@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
@@ -16,9 +21,38 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** `<dir>/<name>.parquet`, with its schema read off the first data
+    * file's footer on the driver: Spark's own inference reads that footer
+    * in a Spark job, which would run while every query's DataFrame is
+    * being built. A partitioned or unreadable path falls back to it. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = footerSchema(spark, path).fold(spark.read)(spark.read.schema)
+      .parquet(path)
     if (name == "events") normalizeTs(df) else df
+  }
+
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    // a file lists as itself
+    val files =
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filterNot(f => f.getPath.getName.startsWith("_") ||
+          f.getPath.getName.startsWith("."))
+        .sortBy(_.getPath.getName)
+    if (files.isEmpty || files.exists(_.isDirectory)) None
+    else {
+      val f = files.head.getPath
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f, r.getFooter),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      finally r.close()
+    }
   }
 
   /** Spread rows across the session's full parallelism before an

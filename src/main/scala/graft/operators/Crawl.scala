@@ -197,7 +197,19 @@ object Crawl {
     * [[Multimodal.sampleAviFrames]] demux shape (one row in, many
     * typed rows out, partition-parallel, no driver involvement). */
   def parseArchives(s: SparkSession, glob: String): DataFrame =
-    extractFromSegments(s.read.format("binaryFile").load(glob))
+    extractFromSegments(segmentFiles(s, glob))
+
+  /** The `binaryFile` rows of the segment files `glob` names
+    * (`<dir>/<file pattern>`): the directory is loaded under a
+    * `pathGlobFilter`, not the glob itself — Spark stats a load path as
+    * a possible file-sink directory, and a literal glob makes that probe
+    * log a FileNotFoundException trace on every load. */
+  private def segmentFiles(s: SparkSession, glob: String): DataFrame = {
+    val slash = glob.lastIndexOf('/')
+    s.read.format("binaryFile")
+      .option("pathGlobFilter", glob.substring(slash + 1))
+      .load(glob.substring(0, slash))
+  }
 
   // ---- REAL WARC/1.0: gzip-compressed, WARC-grammar segments (the
   //      CommonCrawl layout) ----
@@ -467,7 +479,7 @@ object Crawl {
   /** One gz WARC segment per task → (url, html) rows for the response
     * records — no shuffle ever carries raw bytes. */
   def parseWarcSegments(s: SparkSession, glob: String): DataFrame =
-    extractWarcFromSegments(s.read.format("binaryFile").load(glob))
+    extractWarcFromSegments(segmentFiles(s, glob))
 
   /** (url, html) response rows → documents-shaped (doc_id, url,
     * n_html, text): doc_id parsed off the crawler's `/doc/<id>` URL
@@ -1293,7 +1305,7 @@ object Crawl {
   def parseWetSegments(s: SparkSession, glob: String): DataFrame = {
     val spark = s
     import spark.implicits._
-    s.read.format("binaryFile").load(glob)
+    segmentFiles(s, glob)
       .select(col("content")).as[Array[Byte]]
       .flatMap(b => parseWarcRecords(gunzipMembers(b),
         wantType = "conversion", skipHttp = false))

@@ -70,12 +70,7 @@ object Dedup {
     // the grand total, the hot set, and the join's small side
     // (clear-between-queries policy)
     val cnt = ww.groupBy("h").agg(count(lit(1)).as("n")).cache()
-    val tot = cnt.agg(sum("n").cast("long").as("__t"))
-    val hot = cnt.crossJoin(broadcast(tot))
-      .where(col("n") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("h")
+    val hot = Skew.hotKeysByCount(cnt, "h", "n")
     val dup = Skew.hotSaltedJoin(ww, cnt, "h", hot, col("doc_id"))
       .where(col("n") > 1)
       .select(col("doc_id"), col("p"))
@@ -151,12 +146,7 @@ object Dedup {
       .agg(min(struct(col("doc_id"), col("p"))).as("w"),
         count(lit(1)).as("n"))
       .cache()
-    val tot = win.agg(sum("n").cast("long").as("__t"))
-    val hot = win.crossJoin(broadcast(tot))
-      .where(col("n") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("h")
+    val hot = Skew.hotKeysByCount(win, "h", "n")
     val rem = Skew.hotSaltedJoin(ww, win, "h", hot, col("doc_id"))
       .where(col("n") > 1 &&
         !(col("w.doc_id") === col("doc_id") && col("w.p") === col("p")))
@@ -304,12 +294,7 @@ object Dedup {
         count(lit(1)).as("n"))
       .join(oldIdx, Seq("h"), "left")
       .cache()
-    val tot = idx.agg(sum("n").cast("long").as("__t"))
-    val hot = idx.crossJoin(broadcast(tot))
-      .where(col("n") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("h")
+    val hot = Skew.hotKeysByCount(idx, "h", "n")
     val rem = Skew.hotSaltedJoin(nw, idx, "h", hot, col("doc_id"))
       .where(col("__old").isNotNull ||
         (col("n") > 1 &&
@@ -1114,12 +1099,7 @@ object Dedup {
     val dfreq0 = tkH.groupBy("g").agg(count(lit(1)).as("df"))
     val dfreq = if (pinAttach) dfreq0.localCheckpoint()
       else dfreq0.cache()
-    val tot = dfreq.agg(sum("df").cast("long").as("__t"))
-    val hot = dfreq.crossJoin(broadcast(tot))
-      .where(col("df") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("g")
+    val hot = Skew.hotKeysByCount(dfreq, "g", "df")
     // rarest-first rank and the set size off ONE doc_id exchange
     val wd = Window.partitionBy("doc_id")
     val wr = wd.orderBy(col("df"), col("g"))
@@ -1205,12 +1185,7 @@ object Dedup {
     // per-window document frequency: one keyed aggregate; cached —
     // referenced by the total, the hot set, and the attach small side
     val dfreq = tk.groupBy("g").agg(count(lit(1)).as("df")).cache()
-    val tot = dfreq.agg(sum("df").cast("long").as("__t"))
-    val hot = dfreq.crossJoin(broadcast(tot))
-      .where(col("df") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("g")
+    val hot = Skew.hotKeysByCount(dfreq, "g", "df")
     val wd = Window.partitionBy("doc_id")
     val wr = wd.orderBy(col("df"), col("g"))
     val pref = Skew.hotSaltedJoin(tk, dfreq, "g", hot, col("doc_id"))
@@ -1644,12 +1619,7 @@ object Dedup {
         .agg(min(struct(col("doc_id"), col("pidx"))).as("w"),
           count(lit(1)).as("occs"))
         .cache()
-      val tot = win.agg(sum("occs").cast("long").as("__t"))
-      val hot = win.crossJoin(broadcast(tot))
-        .where(col("occs") >=
-          greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-            lit(Skew.MinHotCount)))
-        .select("h")
+      val hot = Skew.hotKeysByCount(win, "h", "occs")
       Skew.hotSaltedJoin(occ, win.select(col("h"), col("w")), "h", hot,
           col("doc_id"))
         .withColumn("kept",

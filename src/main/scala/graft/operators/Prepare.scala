@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Metrics, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -102,9 +102,17 @@ object Prepare {
     * [[Dedup.connectedComponents]] precedent — the stage result
     * (slim survivor rows) persists on executors and downstream plans
     * see a leaf; a 100 TB run would checkpoint these boundaries to
-    * durable storage instead (same DAG, durable edges). */
+    * durable storage instead (same DAG, durable edges).
+    *
+    * Every job launched while the frame is built (the four checkpoints
+    * and any eager work of `gate`, such as a memoized model build) runs
+    * under the job description of its stage's report label, so a
+    * [[Metrics.record]] of the query is its stage table; the lazy
+    * scrub, pack and report rows run in the caller's action. */
   def fullPrepare(d: DataFrame,
       gate: DataFrame => DataFrame = heuristicGate): DataFrame = {
+    def stage[T](label: String)(body: => T): T =
+      Metrics.labelled(d.sparkSession, label)(body)
     // stage 1: PII scrub + line-rule boilerplate drop on the RAW text
     // (r13 — the stage real pipelines run FIRST: canonicalization
     // erases the punctuation PII patterns match and the newline
@@ -138,24 +146,29 @@ object Prepare {
     // 4.8 → 8.8 s when the scrub stage first landed; ~7.0 s with the
     // spread + this checkpoint — the residual over r12 is the new
     // stage's honest work)
-    val canon = TextAnalysis.canonicalized(scrub).localCheckpoint()
-    val gated = gate(canon)
+    val canon = stage("2_canonicalize")(
+      TextAnalysis.canonicalized(scrub).localCheckpoint())
+    val gated = stage("3_quality_gate")(gate(canon))
     // survivors of the ExactSubstr clean: (doc_id, text, n_kept) —
     // feeds its count row, the near-dup pair join AND the anti-join's
     // keep side
-    val cleaned = Dedup.exactSubstrCleaned(gated).localCheckpoint()
+    val cleaned = stage("4_exact_substr")(
+      Dedup.exactSubstrCleaned(gated).localCheckpoint())
     // trigram shingles: the dedup_jaccard_prefix3 measurement (the
     // position-richer plane thins candidates 50x at the same
     // threshold) applied where it matters most — inside the composed
     // pipeline's hottest stage
-    val losers = Dedup.prefixJaccardPairs(cleaned, shingleWidth = 3)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val deduped = cleaned.join(losers, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val flagged = TextAnalysis.decontaminatePairs(deduped)
-      .select(col("train_doc").as("doc_id")).distinct()
-    val train = deduped.where(col("doc_id") % 10 =!= 0)
-      .join(flagged, Seq("doc_id"), "left_anti").localCheckpoint()
+    val deduped = stage("5_near_dup") {
+      val losers = Dedup.prefixJaccardPairs(cleaned, shingleWidth = 3)
+        .select(col("doc_b").as("doc_id")).distinct()
+      cleaned.join(losers, Seq("doc_id"), "left_anti").localCheckpoint()
+    }
+    val train = stage("6_decontaminate") {
+      val flagged = TextAnalysis.decontaminatePairs(deduped)
+        .select(col("train_doc").as("doc_id")).distinct()
+      deduped.where(col("doc_id") % 10 =!= 0)
+        .join(flagged, Seq("doc_id"), "left_anti").localCheckpoint()
+    }
     val packed = Packing.packSequences(train)
     val s5 = packed.agg(
       expr(s"(sum(n_tokens) + ${Packing.SeqLen - 1}) div ${Packing.SeqLen}")

@@ -49,16 +49,13 @@ object TextAnalysis {
       .select(col("doc_id"),
         struct(xxhash64(col("g")).as("h1"),
           xxhash64(lit(1L), col("g")).as("h2")).as("g"))
-    // cached: the docfreq aggregate feeds the rare set, the grand
-    // total, and the hot set (clear-between-queries policy)
-    val dfreq = bg.groupBy("g").agg(count(lit(1)).as("dfreq")).cache()
+    // the docfreq aggregate feeds the rare set, the grand total and the
+    // hot set through ONE reused exchange — not cached: a lazily built
+    // cache made the plan depend on which consumer materialized it
+    // first (one exchange and ~2x the shuffled records more, at random)
+    val dfreq = bg.groupBy("g").agg(count(lit(1)).as("dfreq"))
     val rare = dfreq.where(col("dfreq") <= 20).select("g")
-    val tot = dfreq.agg(sum("dfreq").cast("long").as("__t"))
-    val hot = dfreq.crossJoin(broadcast(tot))
-      .where(col("dfreq") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("g")
+    val hot = Skew.hotKeysByCount(dfreq, "g", "dfreq")
     Skew.hotSaltedJoin(bg, rare, "g", hot, col("doc_id"))
       .groupBy("g").agg(
         collect_set(when(col("doc_id") % 10 === 0, col("doc_id")))
@@ -193,14 +190,10 @@ object TextAnalysis {
     // re-run the gram explode (and its spread exchange) per branch
     val pruned = bg.where(col("doc_id") % 10 === 0 ||
       call_function("might_contain", lit(bf), xxhash64(col("g"))))
-    val dfreq = bg.groupBy("g").agg(count(lit(1)).as("dfreq")).cache()
+    // not cached, as in decontaminatePairs
+    val dfreq = bg.groupBy("g").agg(count(lit(1)).as("dfreq"))
     val rare = dfreq.where(col("dfreq") <= 20).select("g")
-    val tot = dfreq.agg(sum("dfreq").cast("long").as("__t"))
-    val hot = dfreq.crossJoin(broadcast(tot))
-      .where(col("dfreq") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("g")
+    val hot = Skew.hotKeysByCount(dfreq, "g", "dfreq")
     Skew.hotSaltedJoin(pruned, rare, "g", hot, col("doc_id"))
       .groupBy("g").agg(
         collect_set(when(col("doc_id") % 10 === 0, col("doc_id")))
@@ -559,10 +552,7 @@ object TextAnalysis {
       .join(cnt1.hint("shuffle_hash"), "w1")
       .select(col("g"),
         (log(col("n2") / col("n1").cast("double")) / log(lit(2d))).as("lp"))
-    val tot = cnt2.agg(sum("n2").cast("long").as("__t"))
-    val hot = cnt2.crossJoin(broadcast(tot))
-      .where(col("n2") >= greatest(expr(s"__t div ${Skew.HotKeyFanout}"), lit(Skew.MinHotCount)))
-      .select("g")
+    val hot = Skew.hotKeysByCount(cnt2, "g", "n2")
     Skew.hotSaltedJoin(bg, scored, "g", hot, col("doc_id"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_bigrams"),
@@ -633,11 +623,8 @@ object TextAnalysis {
       "maxDf must sit below the hot cutoff or the head drop loses rows")
     val grams = ngramRows(d, n, distinctPerDoc = true)
     val dfreq = grams.groupBy("g").agg(count(lit(1)).as("df")).cache()
-    val tot = dfreq.agg(sum("df").cast("long").as("__t"))
-    val hot = dfreq.crossJoin(broadcast(tot))
-      .where(col("df") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"), lit(Skew.MinHotCount)))
-      .select(col("g"), lit(true).as("__hot"))
+    val hot = Skew.hotKeysByCount(dfreq, "g", "df")
+      .withColumn("__hot", lit(true))
     grams.join(broadcast(hot), Seq("g"), "left")
       .where(col("__hot").isNull).drop("__hot")
       .groupBy("g")
@@ -1171,10 +1158,7 @@ object TextAnalysis {
       // cached: referenced by the grand total, the hot set, and the
       // salted join's small side (clear-between-queries policy)
       val dfreq = bg.groupBy("g").agg(count(lit(1)).as("dfreq")).cache()
-      val tot = dfreq.agg(sum("dfreq").cast("long").as("__t"))
-      val hot = dfreq.crossJoin(broadcast(tot))
-        .where(col("dfreq") >= greatest(expr(s"__t div ${Skew.HotKeyFanout}"), lit(Skew.MinHotCount)))
-        .select("g")
+      val hot = Skew.hotKeysByCount(dfreq, "g", "dfreq")
       Skew.hotSaltedJoin(bg, dfreq, "g", hot, col("doc_id"))
         .groupBy("doc_id")
         .agg(sum(when(col("dfreq") >= 20, 1).otherwise(0)).cast("long")
@@ -1908,12 +1892,7 @@ object TextAnalysis {
       // referenced by the grand total, the hot set, and the join's
       // small side (clear-between-queries policy)
       val cnt = ww.groupBy("h").agg(count(lit(1)).as("n")).cache()
-      val tot = cnt.agg(sum("n").cast("long").as("__t"))
-      val hot = cnt.crossJoin(broadcast(tot))
-        .where(col("n") >=
-          greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-            lit(Skew.MinHotCount)))
-        .select("h")
+      val hot = Skew.hotKeysByCount(cnt, "h", "n")
       val nd = Skew.hotSaltedJoin(ww, cnt, "h", hot, col("doc_id"))
         .where(col("n") > 1)
         .select(col("doc_id"),

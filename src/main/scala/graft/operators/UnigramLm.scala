@@ -430,12 +430,7 @@ object UnigramLm {
       .cache()
     val seg = viterbi(wf, scF)
       .select(col("word"), col("np"), col("path"), col("s"))
-    val tot = wf.agg(sum("freq").cast("long").as("__t"))
-    val hot = wf.crossJoin(broadcast(tot))
-      .where(col("freq") >=
-        greatest(expr(s"__t div ${Skew.HotKeyFanout}"),
-          lit(Skew.MinHotCount)))
-      .select("word")
+    val hot = Skew.hotKeysByCount(wf, "word", "freq")
     val toks = Tables.spread(docs, col("doc_id"))
       .select(col("doc_id"),
         posexplode(split(col("text"), "\\s+")).as(Seq("tpos", "word")))

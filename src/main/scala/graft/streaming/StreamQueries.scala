@@ -136,37 +136,7 @@ object StreamQueries {
         val root = java.nio.file.Files.createTempDirectory("graft_vchain")
         sys.addShutdownHook(deleteRecursively(root))
         val p = s"$root/chain"
-        def fold(st: DataFrame): DataFrame =
-          DeltaIndex.resolveLatestOps(st, Seq("doc_id"))
-        def commit(batchId: Long, delta: DataFrame): Unit =
-          DeltaIndex.commit(delta, p, batchId, init, Some(bkt),
-            compactEvery = 2, inlineBase = true, baseFold = fold)
-        // seed: generation-1 upserts ride base_-1
-        DeltaIndex.seed(DeltaIndex.asOps(d, "u", -1L), p, Some(bkt))
-        // b0: a second upsert generation
-        commit(0L, DeltaIndex.asOps(d.where(col("doc_id") % 5 === 0)
-          .withColumn("v", col("v") + 500L), "u",
-          DeltaIndex.upsertSeq(0)))
-        // b1: tombstones (null payload — the takedown-record shape);
-        // triggers the WINDOW fold (mid_1)
-        commit(1L, DeltaIndex.asOps(d.where(col("doc_id") % 7 === 0)
-          .withColumn("v", lit(null).cast("long")), "d",
-          DeltaIndex.deleteSeq(1)))
-        // b2: delete-then-reingest above the tombstone
-        commit(2L, DeltaIndex.asOps(d.where(col("doc_id") % 14 === 0)
-          .withColumn("v", col("v") + 1000L), "u",
-          DeltaIndex.upsertSeq(2)))
-        // b3: a third generation; triggers the RESOLVING base fold
-        // (base_3 — dead rows and tombstones below it leave the
-        // chain)
-        commit(3L, DeltaIndex.asOps(d.where(col("doc_id") % 11 === 0)
-          .withColumn("v", col("v") + 2000L), "u",
-          DeltaIndex.upsertSeq(3)))
-        // b4: tombstones ABOVE the base, so the read itself must
-        // resolve across tiers (base survivors vs fresh deltas)
-        commit(4L, DeltaIndex.asOps(d.where(col("doc_id") % 13 === 0)
-          .withColumn("v", lit(null).cast("long")), "d",
-          DeltaIndex.deleteSeq(4)))
+        writeChain(d, p, init, bkt)
         p
       }
       // the pruned probe read: only the buckets the probe keys
@@ -208,31 +178,48 @@ object StreamQueries {
     val root = java.nio.file.Files
       .createTempDirectory("graft_vchain_bench")
     val p = s"$root/chain"
-    def fold(st: DataFrame): DataFrame =
-      DeltaIndex.resolveLatestOps(st, Seq("doc_id"))
-    def commit(batchId: Long, delta: DataFrame): Unit =
-      DeltaIndex.commit(delta, p, batchId, init, Some(bkt),
-        compactEvery = 2, inlineBase = true, baseFold = fold)
     try {
-      DeltaIndex.seed(DeltaIndex.asOps(d, "u", -1L), p, Some(bkt))
-      commit(0L, DeltaIndex.asOps(d.where(col("doc_id") % 5 === 0)
-        .withColumn("v", col("v") + 500L), "u", DeltaIndex.upsertSeq(0)))
-      commit(1L, DeltaIndex.asOps(d.where(col("doc_id") % 7 === 0)
-        .withColumn("v", lit(null).cast("long")), "d",
-        DeltaIndex.deleteSeq(1)))
-      commit(2L, DeltaIndex.asOps(d.where(col("doc_id") % 14 === 0)
-        .withColumn("v", col("v") + 1000L), "u", DeltaIndex.upsertSeq(2)))
-      commit(3L, DeltaIndex.asOps(d.where(col("doc_id") % 11 === 0)
-        .withColumn("v", col("v") + 2000L), "u", DeltaIndex.upsertSeq(3)))
-      commit(4L, DeltaIndex.asOps(d.where(col("doc_id") % 13 === 0)
-        .withColumn("v", lit(null).cast("long")), "d",
-        DeltaIndex.deleteSeq(4)))
+      writeChain(d, p, init, bkt)
       DeltaIndex.resolveLatest(
           DeltaIndex.readAll(p, init, s), Seq("doc_id"))
         .agg(count(lit(1)).cast("long").as("n_live"),
           sum("v").cast("long").as("sum_v"))
         .localCheckpoint()
     } finally deleteRecursively(root)
+  }
+
+  /** The versioned chain both `stream_resolve_pruned` and
+    * [[ingestCommitBench]] read, written to `p` from the (doc_id, v)
+    * rows `d`: the seed (generation-1 upserts ride base_-1) plus five
+    * delta commits of the query's op multiset, compacting every 2. */
+  private def writeChain(d: DataFrame, p: String, init: DataFrame,
+      bkt: Bucketing): Unit = {
+    def fold(st: DataFrame): DataFrame =
+      DeltaIndex.resolveLatestOps(st, Seq("doc_id"))
+    def commit(batchId: Long, delta: DataFrame): Unit =
+      DeltaIndex.commit(delta, p, batchId, init, Some(bkt),
+        compactEvery = 2, inlineBase = true, baseFold = fold)
+    DeltaIndex.seed(DeltaIndex.asOps(d, "u", -1L), p, Some(bkt))
+    // b0: a second upsert generation
+    commit(0L, DeltaIndex.asOps(d.where(col("doc_id") % 5 === 0)
+      .withColumn("v", col("v") + 500L), "u", DeltaIndex.upsertSeq(0)))
+    // b1: tombstones (null payload — the takedown-record shape);
+    // triggers the WINDOW fold (mid_1)
+    commit(1L, DeltaIndex.asOps(d.where(col("doc_id") % 7 === 0)
+      .withColumn("v", lit(null).cast("long")), "d",
+      DeltaIndex.deleteSeq(1)))
+    // b2: delete-then-reingest above the tombstone
+    commit(2L, DeltaIndex.asOps(d.where(col("doc_id") % 14 === 0)
+      .withColumn("v", col("v") + 1000L), "u", DeltaIndex.upsertSeq(2)))
+    // b3: a third generation; triggers the RESOLVING base fold (base_3 —
+    // dead rows and tombstones below it leave the chain)
+    commit(3L, DeltaIndex.asOps(d.where(col("doc_id") % 11 === 0)
+      .withColumn("v", col("v") + 2000L), "u", DeltaIndex.upsertSeq(3)))
+    // b4: tombstones ABOVE the base, so the read itself must resolve
+    // across tiers (base survivors vs fresh deltas)
+    commit(4L, DeltaIndex.asOps(d.where(col("doc_id") % 13 === 0)
+      .withColumn("v", lit(null).cast("long")), "d",
+      DeltaIndex.deleteSeq(4)))
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -625,58 +625,62 @@ class CrawlSpec extends SparkSpec {
         s"evil ${Crawl.WarcVersion}embedded version line"),
       (3L, "https://b.example.org/doc/3", ""),
       (4L, "https://b.example.org/doc/4", "four four four four"))
-    val dir = java.nio.file.Files.createTempDirectory("wet_rt").toString
-    Crawl.writeWetSegments(
-      docs.toDF("doc_id", "url", "text").repartition(3), dir)
-    val files = new java.io.File(dir).listFiles()
-    assert(files.nonEmpty && files.forall(_.getName.endsWith(".warc.gz")))
-    val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    assert(back == docs.map(d => (d._2, d._3)).toSet)
+    withTempDir("wet_rt") { dir =>
+      Crawl.writeWetSegments(
+        docs.toDF("doc_id", "url", "text").repartition(3), dir)
+      val files = new java.io.File(dir).listFiles()
+      assert(files.nonEmpty && files.forall(_.getName.endsWith(".warc.gz")))
+      val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      assert(back == docs.map(d => (d._2, d._3)).toSet)
+    }
   }
 
   test("writeWetSegments clears STALE shards from a wider previous " +
       "run — a re-run's directory holds exactly this frame's corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("wet_stale").toString
-    val wide = (1L to 9L)
-      .map(i => (i, s"https://a.example.org/doc/$i", s"doc $i"))
-    Crawl.writeWetSegments(wide.toDF("doc_id", "url", "text")
-      .repartition(4), dir)
-    val narrow = Seq((99L, "https://a.example.org/doc/99", "only doc"))
-    Crawl.writeWetSegments(narrow.toDF("doc_id", "url", "text")
-      .coalesce(1), dir)
-    val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    assert(back == Set(("https://a.example.org/doc/99", "only doc")))
+    withTempDir("wet_stale") { dir =>
+      val wide = (1L to 9L)
+        .map(i => (i, s"https://a.example.org/doc/$i", s"doc $i"))
+      Crawl.writeWetSegments(wide.toDF("doc_id", "url", "text")
+        .repartition(4), dir)
+      val narrow = Seq((99L, "https://a.example.org/doc/99", "only doc"))
+      Crawl.writeWetSegments(narrow.toDF("doc_id", "url", "text")
+        .coalesce(1), dir)
+      val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      assert(back == Set(("https://a.example.org/doc/99", "only doc")))
+    }
   }
 
   test("writeWetSegments clears ONLY its own shard pattern — unrelated " +
       "files and subdirectories in the output dir survive (r12 advice: " +
       "the unfiltered clear destroyed them / threw on directories)") {
-    val dir = java.nio.file.Files.createTempDirectory("wet_foreign")
-    val foreign = dir.resolve("manifest.json")
-    java.nio.file.Files.write(foreign, "{}".getBytes("UTF-8"))
-    val sub = dir.resolve("checkpoint")
-    java.nio.file.Files.createDirectories(sub)
-    java.nio.file.Files.write(sub.resolve("state"), "x".getBytes("UTF-8"))
-    // an abandoned tmp half-shard from a killed task IS ours: cleared
-    val staleTmp = dir.resolve("part-00007.warc.gz.tmp")
-    java.nio.file.Files.write(staleTmp, "half".getBytes("UTF-8"))
-    val docs = Seq((5L, "https://a.example.org/doc/5", "five tokens"))
-    Crawl.writeWetSegments(
-      docs.toDF("doc_id", "url", "text").coalesce(1), dir.toString)
-    assert(java.nio.file.Files.exists(foreign),
-      "unrelated file must survive the shard clear")
-    assert(java.nio.file.Files.exists(sub.resolve("state")),
-      "subdirectory must survive the shard clear")
-    assert(!java.nio.file.Files.exists(staleTmp),
-      "an abandoned .tmp half-shard is ours and must be cleared")
-    val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    assert(back == Set(("https://a.example.org/doc/5", "five tokens")))
-    // and no .tmp remains after a successful commit (atomic rename)
-    assert(!new java.io.File(dir.toString).listFiles()
-      .exists(_.getName.endsWith(".tmp")))
+    withTempDir("wet_foreign") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val foreign = dir.resolve("manifest.json")
+      java.nio.file.Files.write(foreign, "{}".getBytes("UTF-8"))
+      val sub = dir.resolve("checkpoint")
+      java.nio.file.Files.createDirectories(sub)
+      java.nio.file.Files.write(sub.resolve("state"), "x".getBytes("UTF-8"))
+      // an abandoned tmp half-shard from a killed task IS ours: cleared
+      val staleTmp = dir.resolve("part-00007.warc.gz.tmp")
+      java.nio.file.Files.write(staleTmp, "half".getBytes("UTF-8"))
+      val docs = Seq((5L, "https://a.example.org/doc/5", "five tokens"))
+      Crawl.writeWetSegments(
+        docs.toDF("doc_id", "url", "text").coalesce(1), dir.toString)
+      assert(java.nio.file.Files.exists(foreign),
+        "unrelated file must survive the shard clear")
+      assert(java.nio.file.Files.exists(sub.resolve("state")),
+        "subdirectory must survive the shard clear")
+      assert(!java.nio.file.Files.exists(staleTmp),
+        "an abandoned .tmp half-shard is ours and must be cleared")
+      val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      assert(back == Set(("https://a.example.org/doc/5", "five tokens")))
+      // and no .tmp remains after a successful commit (atomic rename)
+      assert(!new java.io.File(dir.toString).listFiles()
+        .exists(_.getName.endsWith(".tmp")))
+    }
   }
 
   test("WET: an oversized record is DROPPED with a counter, never " +
@@ -690,51 +694,53 @@ class CrawlSpec extends SparkSpec {
       (1L, "https://a.example.org/doc/1", "kept body one"),
       (2L, longUrl, "poison record body"),
       (3L, "https://a.example.org/doc/3", "kept body three"))
-    val dir = java.nio.file.Files.createTempDirectory("wet_oversz").toString
-    val droppedN = Crawl.writeWetSegments(
-      docs.toDF("doc_id", "url", "text").repartition(2), dir)
-    assert(droppedN == 1L, s"exactly the poison record drops: $droppedN")
-    val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    assert(back == Set(
-      ("https://a.example.org/doc/1", "kept body one"),
-      ("https://a.example.org/doc/3", "kept body three")),
-      "intact siblings survive; the poison record is absent")
-    // the FIXTURE encoder still fails loudly on the same record — a
-    // fixture that would make a reader cap decide parity is a bug at
-    // write time, not a silent drop
-    val e = intercept[IllegalArgumentException] {
-      Crawl.encodeFixtureRecord(Seq(
-        "WARC-Type" -> "conversion", "WARC-Target-URI" -> longUrl),
-        "x".getBytes("UTF-8"))
+    withTempDir("wet_oversz") { dir =>
+      val droppedN = Crawl.writeWetSegments(
+        docs.toDF("doc_id", "url", "text").repartition(2), dir)
+      assert(droppedN == 1L, s"exactly the poison record drops: $droppedN")
+      val back = Crawl.parseWetSegments(spark, s"$dir/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      assert(back == Set(
+        ("https://a.example.org/doc/1", "kept body one"),
+        ("https://a.example.org/doc/3", "kept body three")),
+        "intact siblings survive; the poison record is absent")
+      // the FIXTURE encoder still fails loudly on the same record — a
+      // fixture that would make a reader cap decide parity is a bug at
+      // write time, not a silent drop
+      val e = intercept[IllegalArgumentException] {
+        Crawl.encodeFixtureRecord(Seq(
+          "WARC-Type" -> "conversion", "WARC-Target-URI" -> longUrl),
+          "x".getBytes("UTF-8"))
+      }
+      assert(e.getMessage.contains("MaxHeaderBytes"))
     }
-    assert(e.getMessage.contains("MaxHeaderBytes"))
   }
 
   test("fixture memo tracks what is ON DISK per root: dir A -> dir B " +
       "-> dir A again rewrites A's archives instead of serving B's " +
       "bytes (r14 advice: the grow-only key set skipped the rewrite)") {
     // a second documents table in a scratch dir, disjoint doc_ids
-    val dirB = java.nio.file.Files.createTempDirectory("crawl_dirB").toString
-    Seq((900001L, "tiny corpus b one", "alpha", "en"),
-        (900002L, "tiny corpus b two", "beta", "en"))
-      .toDF("doc_id", "text", "source", "lang")
-      .write.parquet(s"$dirB/documents.parquet")
-    def fixtureIds(): Set[Long] = {
-      import org.apache.spark.sql.functions.col
-      Crawl.parseArchives(spark, s"${Crawl.FixtureRoot}/*.garc")
-        .select(col("doc_id")).as[Long].collect().toSet
+    withTempDir("crawl_dirB") { dirB =>
+      Seq((900001L, "tiny corpus b one", "alpha", "en"),
+          (900002L, "tiny corpus b two", "beta", "en"))
+        .toDF("doc_id", "text", "source", "lang")
+        .write.parquet(s"$dirB/documents.parquet")
+      def fixtureIds(): Set[Long] = {
+        import org.apache.spark.sql.functions.col
+        Crawl.parseArchives(spark, s"${Crawl.FixtureRoot}/*.garc")
+          .select(col("doc_id")).as[Long].collect().toSet
+      }
+      Crawl.writeArchives(spark, sfDir)
+      val idsA = fixtureIds()
+      assert(!idsA.contains(900001L))
+      Crawl.writeArchives(spark, dirB)
+      assert(fixtureIds() == Set(900001L, 900002L),
+        "dir B's write must overwrite the shared fixture root")
+      Crawl.writeArchives(spark, sfDir)
+      assert(fixtureIds() == idsA,
+        "returning to dir A must REWRITE its archives — a stale memo " +
+          "would silently serve dir B's bytes here")
     }
-    Crawl.writeArchives(spark, sfDir)
-    val idsA = fixtureIds()
-    assert(!idsA.contains(900001L))
-    Crawl.writeArchives(spark, dirB)
-    assert(fixtureIds() == Set(900001L, 900002L),
-      "dir B's write must overwrite the shared fixture root")
-    Crawl.writeArchives(spark, sfDir)
-    assert(fixtureIds() == idsA,
-      "returning to dir A must REWRITE its archives — a stale memo " +
-        "would silently serve dir B's bytes here")
   }
 
   test("AV-in-archive: the audio/video archive trajectories reproduce " +
@@ -754,23 +760,24 @@ class CrawlSpec extends SparkSpec {
     val docs = Seq(
       (1L, "https://a.example.org/doc/1", "distinctive payload body"),
       (2L, "https://a.example.org/doc/2", "sibling record text here"))
-    val dir = java.nio.file.Files.createTempDirectory("wet_tamper").toString
-    Crawl.writeWetSegments(docs.toDF("doc_id", "url", "text").coalesce(1),
-      dir)
-    val shard = new java.io.File(dir).listFiles().head
-    val raw = Crawl.gunzipMembers(
-      java.nio.file.Files.readAllBytes(shard.toPath))
-    val s = new String(raw, java.nio.charset.StandardCharsets.US_ASCII)
-    // same-LENGTH flip keeps the framing walk consistent — only the
-    // record-level digest can catch it
-    val tampered = s.replace("distinctive payload body",
-      "distinctivX payload body")
-    assert(s != tampered)
-    val back = Crawl.parseWarcRecords(
-      tampered.getBytes(java.nio.charset.StandardCharsets.US_ASCII),
-      wantType = "conversion", skipHttp = false)
-    assert(back == Seq(
-      ("https://a.example.org/doc/2", "sibling record text here")))
+    withTempDir("wet_tamper") { dir =>
+      Crawl.writeWetSegments(docs.toDF("doc_id", "url", "text").coalesce(1),
+        dir)
+      val shard = new java.io.File(dir).listFiles().head
+      val raw = Crawl.gunzipMembers(
+        java.nio.file.Files.readAllBytes(shard.toPath))
+      val s = new String(raw, java.nio.charset.StandardCharsets.US_ASCII)
+      // same-LENGTH flip keeps the framing walk consistent — only the
+      // record-level digest can catch it
+      val tampered = s.replace("distinctive payload body",
+        "distinctivX payload body")
+      assert(s != tampered)
+      val back = Crawl.parseWarcRecords(
+        tampered.getBytes(java.nio.charset.StandardCharsets.US_ASCII),
+        wantType = "conversion", skipHttp = false)
+      assert(back == Seq(
+        ("https://a.example.org/doc/2", "sibling record text here")))
+    }
   }
 
   test("pipeline_url_prepare: stage 0 counts canonical PAGES — URL " +

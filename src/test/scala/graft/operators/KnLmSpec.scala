@@ -169,66 +169,66 @@ class KnLmSpec extends SparkSpec {
   test("kn5 memo lifecycle: regenerating the table evicts every " +
       "superseded variant entry AND releases its checkpointed planes " +
       "(pinned-block count returns to one generation's footprint)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("kn5_lifecycle").toString
-    def writeDocs(salt: String): Unit =
-      (0L until 12L).map { i =>
-        val src = s"src${i % 6}" // src0..3 trusted, 4..5 not
-        val t = s"w$salt${i % 3} " * 8 + s"t$salt$i t$salt$i"
-        (i, t.trim, "zz", src, t.length.toLong)
-      }.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val canon = Seq(
-      (1L, "zz", 50L, "wa0 wa1 wa2 wa0 wa1 wa2 wa0 wa1"),
-      (2L, "zz", 50L, "wb0 wb1 wb2 wb0 wb1 wb2 wb0 wb1"),
-      (3L, "zz", 50L, "qq ww ee rr tt yy uu ii"))
-      .toDF("doc_id", "lang", "n_chars", "text")
-    def blocks: Int = spark.sparkContext.getPersistentRDDs.size
-    def fpOf(k: String): String = k.substring(k.indexOf('#') + 1)
-    def buildBoth(): Unit = {
-      KnLm.pplGateMemo(dir)(canon).collect()
-      KnLm.pplGateRefMemo(dir)(canon).collect()
-    }
-    // settle the baseline: the async ContextCleaner may still be
-    // releasing OTHER tests' unreachable checkpoints — read base only
-    // once the count holds still (the NbLangidSpec lifecycle
-    // discipline), or the concurrent shrink masks the build's growth
-    def settled(): Int = {
-      var prev = -1; var cur = blocks
-      val dl = System.currentTimeMillis() + 15000
-      while (cur != prev && System.currentTimeMillis() < dl) {
-        System.gc(); Thread.sleep(300); prev = cur; cur = blocks
+    withTempDir("kn5_lifecycle") { dir =>
+      def writeDocs(salt: String): Unit =
+        (0L until 12L).map { i =>
+          val src = s"src${i % 6}" // src0..3 trusted, 4..5 not
+          val t = s"w$salt${i % 3} " * 8 + s"t$salt$i t$salt$i"
+          (i, t.trim, "zz", src, t.length.toLong)
+        }.toDF("doc_id", "text", "lang", "source", "n_chars")
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val canon = Seq(
+        (1L, "zz", 50L, "wa0 wa1 wa2 wa0 wa1 wa2 wa0 wa1"),
+        (2L, "zz", 50L, "wb0 wb1 wb2 wb0 wb1 wb2 wb0 wb1"),
+        (3L, "zz", 50L, "qq ww ee rr tt yy uu ii"))
+        .toDF("doc_id", "lang", "n_chars", "text")
+      def blocks: Int = spark.sparkContext.getPersistentRDDs.size
+      def fpOf(k: String): String = k.substring(k.indexOf('#') + 1)
+      def buildBoth(): Unit = {
+        KnLm.pplGateMemo(dir)(canon).collect()
+        KnLm.pplGateRefMemo(dir)(canon).collect()
       }
-      cur
+      // settle the baseline: the async ContextCleaner may still be
+      // releasing OTHER tests' unreachable checkpoints — read base only
+      // once the count holds still (the NbLangidSpec lifecycle
+      // discipline), or the concurrent shrink masks the build's growth
+      def settled(): Int = {
+        var prev = -1; var cur = blocks
+        val dl = System.currentTimeMillis() + 15000
+        while (cur != prev && System.currentTimeMillis() < dl) {
+          System.gc(); Thread.sleep(300); prev = cur; cur = blocks
+        }
+        cur
+      }
+      spark.catalog.clearCache()
+      writeDocs("a")
+      val base = settled()
+      buildBoth()
+      val genOne = blocks
+      assert(genOne > base, "a built model must pin checkpointed planes")
+      val keys1 = KnLm.kn5Memo.keys.filter(_.contains(dir))
+      assert(keys1.size == 2,
+        s"one live entry per variant for this dir: $keys1")
+      // REGENERATE the table on disk: fresh fingerprint, both variants
+      writeDocs("b")
+      buildBoth()
+      val keys2 = KnLm.kn5Memo.keys.filter(_.contains(dir))
+      assert(keys2.size == 2 &&
+        keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
+        s"superseded fingerprints must be evicted per variant: " +
+          s"$keys1 -> $keys2")
+      // the evicted models' localCheckpoint blocks are released once
+      // the ContextCleaner collects the unreachable frames — poll
+      // through explicit GCs rather than assuming promptness
+      val deadline = System.currentTimeMillis() + 60000
+      var now = blocks
+      while (now > genOne && System.currentTimeMillis() < deadline) {
+        System.gc(); Thread.sleep(250); now = blocks
+      }
+      assert(now <= genOne,
+        s"regeneration must not accumulate checkpointed planes: " +
+          s"baseline $base, one generation $genOne, after regen $now")
     }
-    spark.catalog.clearCache()
-    writeDocs("a")
-    val base = settled()
-    buildBoth()
-    val genOne = blocks
-    assert(genOne > base, "a built model must pin checkpointed planes")
-    val keys1 = KnLm.kn5Memo.keys.filter(_.contains(dir))
-    assert(keys1.size == 2,
-      s"one live entry per variant for this dir: $keys1")
-    // REGENERATE the table on disk: fresh fingerprint, both variants
-    writeDocs("b")
-    buildBoth()
-    val keys2 = KnLm.kn5Memo.keys.filter(_.contains(dir))
-    assert(keys2.size == 2 &&
-      keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
-      s"superseded fingerprints must be evicted per variant: " +
-        s"$keys1 -> $keys2")
-    // the evicted models' localCheckpoint blocks are released once
-    // the ContextCleaner collects the unreachable frames — poll
-    // through explicit GCs rather than assuming promptness
-    val deadline = System.currentTimeMillis() + 60000
-    var now = blocks
-    while (now > genOne && System.currentTimeMillis() < deadline) {
-      System.gc(); Thread.sleep(250); now = blocks
-    }
-    assert(now <= genOne,
-      s"regeneration must not accumulate checkpointed planes: " +
-        s"baseline $base, one generation $genOne, after regen $now")
   }
 
   test("an all-OOV held-out doc (unseen w1 AND w2 everywhere) still " +

@@ -109,52 +109,52 @@ class NbLangidSpec extends SparkSpec {
 
   test("nb model memo lifecycle: a regenerated table evicts the " +
       "superseded entry and releases its checkpointed planes") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("nb_lifecycle").toString
-    def writeDocs(salt: String): Unit =
-      (0L until 10L).map { i =>
-        val lang = if (i % 2 == 0) "aa" else "bb"
-        (i, s"w$salt${i % 2} w$salt${i % 3} w$salt${i % 2}",
-          lang, s"src${i % 3}", 30L)
-      }.toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def blocks: Int = spark.sparkContext.getPersistentRDDs.size
-    def fpOf(k: String): String = k.substring(k.indexOf('#') + 1)
-    val evalDocs = Seq((100L, "wa0 wa1 wa0"), (101L, "wb1 wb2 wb1"))
-      .toDF("doc_id", "text")
-    // settle the baseline: the async ContextCleaner may still be
-    // releasing OTHER tests' unreachable checkpoints — read base only
-    // once the count holds still, or the concurrent shrink masks the
-    // build's growth
-    def settled(): Int = {
-      var prev = -1; var cur = blocks
-      val dl = System.currentTimeMillis() + 15000
-      while (cur != prev && System.currentTimeMillis() < dl) {
-        System.gc(); Thread.sleep(300); prev = cur; cur = blocks
+    withTempDir("nb_lifecycle") { dir =>
+      def writeDocs(salt: String): Unit =
+        (0L until 10L).map { i =>
+          val lang = if (i % 2 == 0) "aa" else "bb"
+          (i, s"w$salt${i % 2} w$salt${i % 3} w$salt${i % 2}",
+            lang, s"src${i % 3}", 30L)
+        }.toDF("doc_id", "text", "lang", "source", "n_chars")
+          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def blocks: Int = spark.sparkContext.getPersistentRDDs.size
+      def fpOf(k: String): String = k.substring(k.indexOf('#') + 1)
+      val evalDocs = Seq((100L, "wa0 wa1 wa0"), (101L, "wb1 wb2 wb1"))
+        .toDF("doc_id", "text")
+      // settle the baseline: the async ContextCleaner may still be
+      // releasing OTHER tests' unreachable checkpoints — read base only
+      // once the count holds still, or the concurrent shrink masks the
+      // build's growth
+      def settled(): Int = {
+        var prev = -1; var cur = blocks
+        val dl = System.currentTimeMillis() + 15000
+        while (cur != prev && System.currentTimeMillis() < dl) {
+          System.gc(); Thread.sleep(300); prev = cur; cur = blocks
+        }
+        cur
       }
-      cur
+      spark.catalog.clearCache()
+      writeDocs("a")
+      val base = settled()
+      NbLangid.routeMemo(spark, dir, evalDocs).collect()
+      val genOne = blocks
+      assert(genOne > base, "a built model must pin checkpointed planes")
+      val keys1 = NbLangid.nbMemo.keys.filter(_.contains(dir))
+      assert(keys1.size == 1, s"one live entry per dir: $keys1")
+      writeDocs("b")
+      NbLangid.routeMemo(spark, dir, evalDocs).collect()
+      val keys2 = NbLangid.nbMemo.keys.filter(_.contains(dir))
+      assert(keys2.size == 1 &&
+        keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
+        s"superseded fingerprint must be evicted: $keys1 -> $keys2")
+      val deadline = System.currentTimeMillis() + 60000
+      var now = blocks
+      while (now > genOne && System.currentTimeMillis() < deadline) {
+        System.gc(); Thread.sleep(250); now = blocks
+      }
+      assert(now <= genOne,
+        s"regeneration must not accumulate planes: $base/$genOne/$now")
     }
-    spark.catalog.clearCache()
-    writeDocs("a")
-    val base = settled()
-    NbLangid.routeMemo(spark, dir, evalDocs).collect()
-    val genOne = blocks
-    assert(genOne > base, "a built model must pin checkpointed planes")
-    val keys1 = NbLangid.nbMemo.keys.filter(_.contains(dir))
-    assert(keys1.size == 1, s"one live entry per dir: $keys1")
-    writeDocs("b")
-    NbLangid.routeMemo(spark, dir, evalDocs).collect()
-    val keys2 = NbLangid.nbMemo.keys.filter(_.contains(dir))
-    assert(keys2.size == 1 &&
-      keys2.map(fpOf).intersect(keys1.map(fpOf)).isEmpty,
-      s"superseded fingerprint must be evicted: $keys1 -> $keys2")
-    val deadline = System.currentTimeMillis() + 60000
-    var now = blocks
-    while (now > genOne && System.currentTimeMillis() < deadline) {
-      System.gc(); Thread.sleep(250); now = blocks
-    }
-    assert(now <= genOne,
-      s"regeneration must not accumulate planes: $base/$genOne/$now")
   }
 
   test("the hot word's attach rows spread across >1 shuffle partition " +

@@ -304,50 +304,54 @@ class PrepareSpec extends SparkSpec {
   test("decontaminated ref gate: a trusted doc contaminated by the " +
       "eval split flips a gate decision ONLY in the undeconned form; " +
       "with no contamination the two gates agree doc for doc") {
-    def writeDocs(rows: Seq[(Long, String, String)]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("refd").toString
-      rows.map { case (id, src, t) => (id, t, "zz", src, t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.parquet(s"$dir/documents.parquet")
-      dir
+    withTempDir("refd") { root =>
+      def writeDocs(name: String,
+          rows: Seq[(Long, String, String)]): String = {
+        val dir = s"$root/$name"
+        rows.map { case (id, src, t) => (id, t, "zz", src, t.length.toLong) }
+          .toDF("doc_id", "text", "lang", "source", "n_chars")
+          .write.parquet(s"$dir/documents.parquet")
+        dir
+      }
+      val base = "key agg row scan slow fast table value part hash"
+      val vt = "qq ww ee rr tt yy uu ii oo pp" // vocabulary only T carries
+      val contam = "c1 c2 c3 c4 c5 c6 c7" // 3 shared rare 5-grams with E
+      val trusted = Seq(
+        (11L, "src0", s"$vt $contam"), // T: contaminated trusted doc
+        (12L, "src0", base), (13L, "src0", base), (14L, "src0", base))
+      val dirContam =
+        writeDocs("contam", trusted :+ ((20L, "src9", contam))) // E
+      val dirClean = writeDocs("clean", trusted) // no eval split at all
+      // candidate C (doc 1) is written in T's private vocabulary; doc 2
+      // is base verbatim, doc 3 a 2-rotation of base (4 seen + 2 unseen
+      // 5-grams) — its nll sits BETWEEN C-with-T (T teaches C's grams,
+      // tiny nll) and C-without-T (full OOV floor), so the tercile cut
+      // lands on opposite sides of C under the two models (3 docs keep
+      // head+middle = 2)
+      val canon = Seq(
+        (1L, "zz", 100L, vt),
+        (2L, "zz", 100L, base),
+        (3L, "zz", 100L, "row scan slow fast table value part hash key agg"))
+        .toDF("doc_id", "lang", "n_chars", "text")
+      def kept(gate: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame): Set[Long] =
+        gate(canon).select("doc_id").as[Long].collect().toSet
+      val undecon = kept(KnLm.pplGateRefMemo(dirContam))
+      val decon = kept(KnLm.pplGateRefDeconMemo(dirContam))
+      assert(undecon.contains(1L),
+        s"UNDECONNED: the contaminated doc T teaches the reference LM " +
+          s"C's vocabulary, so C passes the gate: $undecon")
+      assert(!decon.contains(1L),
+        s"DECONNED: with T dropped from training, C is out-of-" +
+          s"distribution and must fall in the tail tercile: $decon")
+      assert(undecon.size == 2 && decon.size == 2,
+        "both gates keep exactly head+middle of 3 scored docs")
+      // control: with no eval overlap anywhere, decontamination is a
+      // no-op and the two gates agree doc for doc — the flip above is
+      // CAUSED by the contamination, not by the decon machinery itself
+      assert(kept(KnLm.pplGateRefMemo(dirClean)) ==
+        kept(KnLm.pplGateRefDeconMemo(dirClean)))
     }
-    val base = "key agg row scan slow fast table value part hash"
-    val vt = "qq ww ee rr tt yy uu ii oo pp" // vocabulary only T carries
-    val contam = "c1 c2 c3 c4 c5 c6 c7" // 3 shared rare 5-grams with E
-    val trusted = Seq(
-      (11L, "src0", s"$vt $contam"), // T: contaminated trusted doc
-      (12L, "src0", base), (13L, "src0", base), (14L, "src0", base))
-    val dirContam = writeDocs(trusted :+ ((20L, "src9", contam))) // E
-    val dirClean = writeDocs(trusted) // no eval split at all
-    // candidate C (doc 1) is written in T's private vocabulary; doc 2
-    // is base verbatim, doc 3 a 2-rotation of base (4 seen + 2 unseen
-    // 5-grams) — its nll sits BETWEEN C-with-T (T teaches C's grams,
-    // tiny nll) and C-without-T (full OOV floor), so the tercile cut
-    // lands on opposite sides of C under the two models (3 docs keep
-    // head+middle = 2)
-    val canon = Seq(
-      (1L, "zz", 100L, vt),
-      (2L, "zz", 100L, base),
-      (3L, "zz", 100L, "row scan slow fast table value part hash key agg"))
-      .toDF("doc_id", "lang", "n_chars", "text")
-    def kept(gate: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): Set[Long] =
-      gate(canon).select("doc_id").as[Long].collect().toSet
-    val undecon = kept(KnLm.pplGateRefMemo(dirContam))
-    val decon = kept(KnLm.pplGateRefDeconMemo(dirContam))
-    assert(undecon.contains(1L),
-      s"UNDECONNED: the contaminated doc T teaches the reference LM " +
-        s"C's vocabulary, so C passes the gate: $undecon")
-    assert(!decon.contains(1L),
-      s"DECONNED: with T dropped from training, C is out-of-" +
-        s"distribution and must fall in the tail tercile: $decon")
-    assert(undecon.size == 2 && decon.size == 2,
-      "both gates keep exactly head+middle of 3 scored docs")
-    // control: with no eval overlap anywhere, decontamination is a
-    // no-op and the two gates agree doc for doc — the flip above is
-    // CAUSED by the contamination, not by the decon machinery itself
-    assert(kept(KnLm.pplGateRefMemo(dirClean)) ==
-      kept(KnLm.pplGateRefDeconMemo(dirClean)))
   }
 
   test("two non-NFC-equal encodings of one near-dup collapse ONLY " +
