@@ -69,13 +69,6 @@ final class MapReduceJob[K: Ordering: ClassTag, V: ClassTag, R: ClassTag](
   def run(lines: Dataset[String]): R =
     reduceRound(lines.rdd).reduce(merge) // aggregate (runner.cpp:68-76)
 
-  /** Run over a newline-delimited text file — the reference's only source
-    * (reference src/mapreduce.cpp:19,26-29). Spark's text reader does the
-    * line-aligned byte-range splitting (O1) natively.
-    */
-  def run(spark: SparkSession, inputPath: String): R =
-    reduceRound(spark.sparkContext.textFile(inputPath, mappers)).reduce(merge)
-
   /** Run with the reference's file-layout sinks (O12, reference
     * src/runner.cpp:18-19,45-47,65-78): under `outDir`,
     *

@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
   * and tested. IMAGE decode is real: [[decodeImageToFeatures]] decodes
   * PNG/BMP/GIF/JPEG payloads through the JDK's `javax.imageio` (no
   * external dependency) and pools per-pixel luminance into a fixed-width
-  * feature vector. AUDIO decode is real: [[decodeWavToFeatures]] parses
-  * WAV containers through `javax.sound.sampled.AudioSystem` and pools
-  * 16-bit PCM amplitudes the same way. VIDEO decode is real too: the JDK
-  * has no demuxer, so [[decodeAviFrames]] implements the RIFF container
-  * walk itself (LIST/`movi`/`00dc` chunk grammar) and ImageIO decodes
-  * each MJPEG frame — [[decodeVideoToFeatures]] pools per-frame mean
-  * luminance across the frame sequence. [[stubDecodeFeatures]] remains
+  * feature vector. AUDIO decode is real: [[decodeWavAmplitudes]] parses
+  * WAV containers through `javax.sound.sampled.AudioSystem` into 16-bit
+  * PCM amplitudes, which [[audioFingerprint64]] reads. VIDEO decode is
+  * real too: the JDK has no demuxer, so [[decodeAviFrames]] implements
+  * the RIFF container walk itself (LIST/`movi`/`00dc` chunk grammar) and
+  * ImageIO decodes each MJPEG frame — [[decodeVideoToFeatures]] pools
+  * per-frame mean luminance across the frame sequence. [[stubDecodeFeatures]] remains
   * as the generic opaque-binary featurizer (the shape a codec-less
   * modality plugs into), no longer standing in for any modality.
   *
@@ -228,7 +228,7 @@ object Multimodal {
 
   /** 16-bit signed PCM mono WAV encoder (JDK-only): samples are written
     * little-endian through `javax.sound.sampled.AudioSystem`'s own WAVE
-    * writer, so [[decodeWavToFeatures]] exercises a genuine
+    * writer, so [[decodeWavAmplitudes]] exercises a genuine
     * header-parse + PCM-read round trip. Lossless: PCM is the samples. */
   def encodePcmWav(samples: Array[Int], sampleRate: Float = 8000f)
       : Array[Byte] = {
@@ -300,13 +300,6 @@ object Multimodal {
       j += 1
     }
     out
-  }
-
-  /** REAL audio decode: [[decodeWavAmplitudes]] + stripe-mean pooling
-    * into `dim` features — same pooling geometry as the image path. */
-  def decodeWavToFeatures(bytes: Array[Byte], dim: Int): Array[Float] = {
-    val amp = decodeWavAmplitudes(bytes)
-    poolStripes(amp, 0, amp.length, dim)
   }
 
   /** Upper bound on demuxed frame count per container. */

@@ -592,20 +592,6 @@ object StreamOps {
     Map("digests" -> compactChainAuto(indexDir, Seq("h"), spark,
       resolveKey = Seq("h", "doc_id")))
 
-  /** ONE-CALL compaction sweep for an image-dedup index
-    * ([[incrementalImageDedupStreamDurable]] / the versioned form):
-    * sigs + chunks + maxid, each with its own bucketing and resolve
-    * semantics (sigs latest-wins per doc, chunks delete-filtered per
-    * doc, maxid plain). */
-  def compactImageDedupIndexes(indexDir: String,
-      spark: org.apache.spark.sql.SparkSession)
-      : Map[String, Option[Long]] = Map(
-    "sigs" -> compactChainAuto(s"$indexDir/sigs", Seq("doc_id"),
-      spark, resolveKey = Seq("doc_id"), latest = true),
-    "chunks" -> compactChainAuto(s"$indexDir/chunks",
-      Seq("ci", "cv"), spark, resolveKey = Seq("doc_id")),
-    "maxid" -> compactChainAuto(s"$indexDir/maxid", Nil, spark))
-
   /** ONE-CALL compaction sweep for a near-dup MinHash index
     * ([[crawlPrepareStream]]'s sigs/bands/maxid layout or
     * [[incrementalNearDupStreamVersioned]]'s): sigs latest-wins per
@@ -617,17 +603,6 @@ object StreamOps {
       spark, resolveKey = Seq("doc_id"), latest = true),
     "bands" -> compactChainAuto(s"$indexDir/bands",
       Seq("band", "bh"), spark, resolveKey = Seq("doc_id")),
-    "maxid" -> compactChainAuto(s"$indexDir/maxid", Nil, spark))
-
-  /** ONE-CALL compaction sweep for a durable IVF index
-    * ([[ivfIngestStreamDurable]] / [[ivfIngestStreamVersioned]] —
-    * auto-detected): postings latest-wins per vec_id (versioned) or
-    * plain distinct, plus the maxid marker when present. */
-  def compactIvfIndex(indexDir: String,
-      spark: org.apache.spark.sql.SparkSession)
-      : Map[String, Option[Long]] = Map(
-    "postings" -> compactChainAuto(s"$indexDir/postings",
-      Seq("cell"), spark, resolveKey = Seq("vec_id"), latest = true),
     "maxid" -> compactChainAuto(s"$indexDir/maxid", Nil, spark))
 
   /** THE continuous prepare's whole-index compaction sweep

@@ -1,8 +1,9 @@
 package graft
 
 /** Whole-inventory contract checks: every registered query runs at
-  * sf0.001 and returns rows; names/oracles stay consistent. This is the
-  * in-repo twin of the driver's t1 smoke.
+  * sf0.001 (the one [[InventoryRuns]] run) and returns rows;
+  * names/oracles stay consistent. This is the in-repo twin of the
+  * external smoke check.
   */
 class InventorySpec extends SparkSpec {
 
@@ -20,11 +21,10 @@ class InventorySpec extends SparkSpec {
   }
 
   test("every registered query executes and returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, sfDir).count()
-        if (n == 0) Some(name) else None
-    }
+    val runs = InventoryRuns(spark, sfDir).toSeq.sortBy(_._1)
+    val failed = runs.collect { case (name, Left(e)) => s"$name: $e" }
+    assert(failed.isEmpty, failed.mkString("queries failed:\n", "\n", ""))
+    val empties = runs.collect { case (name, Right(r)) if r.rows == 0 => name }
     // Near-dup/LSH queries may legitimately return 0 pairs at tiny scale,
     // and at sf0.001 every customer has an order (empty anti-join);
     // q7_nation_volume needs a cross-nation supplier/customer pair inside

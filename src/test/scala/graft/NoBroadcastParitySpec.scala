@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Broadcast-independence sweep: at 100 TB, sides that broadcast at
   * test scale (dimension tables, count frames, candidate sets) can
@@ -13,7 +13,8 @@ import org.apache.spark.sql.DataFrame
   * `spark.sql.adaptive.autoBroadcastJoinThreshold = -1` (no
   * automatic broadcasts anywhere; only explicit broadcast() hints
   * remain, which model genuinely-bounded frames like 1-row totals)
-  * and asserts cell-exact equality with the default session.
+  * and asserts cell-exact equality with the default session's run in
+  * [[InventoryRuns]], naming every diverging query in one failure.
   */
 class NoBroadcastParitySpec extends SparkSpec {
 
@@ -51,28 +52,24 @@ class NoBroadcastParitySpec extends SparkSpec {
     // the kn5 chain's per-level attaches inside the composed gate
     "pipeline_full_prepare_ppl")
 
-  private def canon(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq.map {
-      case d: Double => java.lang.Double.doubleToLongBits(d)
-      case f: Float  => java.lang.Float.floatToIntBits(f)
-      case x => x
-    }).sortBy(_.mkString(" "))
-
   test("a no-automatic-broadcast session produces cell-identical " +
       "results across dim joins, salted attaches, candidate verifies " +
       "and ANN ranks") {
-    val plain = spark.newSession()
     val nobc = spark.newSession()
     nobc.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     nobc.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    for (name <- sweep) {
-      val fn = SparkEntry.queries(name)
-      plain.catalog.clearCache(); nobc.catalog.clearCache()
-      val a = canon(fn(plain, sfDir))
-      val b = canon(fn(nobc, sfDir))
-      assert(a == b,
-        s"$name: results depend on the broadcast strategy " +
+    val diverged = sweep.flatMap { name =>
+      val a = InventoryRuns(spark, sfDir, name).canonRows
+      nobc.catalog.clearCache()
+      try {
+        val b = InventoryRuns.canon(SparkEntry.queries(name)(nobc, sfDir))
+        if (a == b) None
+        else Some(s"$name: results depend on the broadcast strategy " +
           s"(${a.size} vs ${b.size} rows)")
+      } catch {
+        case NonFatal(e) => Some(s"$name: failed without broadcasts: $e")
+      }
     }
+    assert(diverged.isEmpty, diverged.mkString("\n"))
   }
 }

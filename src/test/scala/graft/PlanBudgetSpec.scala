@@ -731,19 +731,13 @@ class PlanBudgetSpec extends SparkSpec {
 
   for ((name, budget) <- budgets.toSeq.sortBy(_._1))
     test(s"$name stays within its exchange budget ($budget)") {
-      // Hermetic per query, matching the Verify/Bench harness contract
-      // (clearCache between queries): a residual operator-internal
-      // .cache() from an earlier test can otherwise swap a matching
-      // fragment of THIS plan for an InMemoryTableScan, and the
-      // cache-population exchanges behind it shift the measured count.
-      spark.catalog.clearCache()
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      // collect() executes THIS dataset's own QueryExecution (metrics
-      // land on the plan shuffleSummary reads); toRdd trips a Spark
-      // attribute-binding internal error on ann_ivf_int's deduped
-      // self-join at sf0.001. Results are small at spec scale.
-      df.collect()
-      val m = Metrics.shuffleSummary(df)
+      // The shuffles of the query's one collect() in InventoryRuns,
+      // hermetic per query as in the Verify/Bench harness (clearCache
+      // between queries): a residual operator-internal .cache() from an
+      // earlier query could otherwise swap a matching fragment of THIS
+      // plan for an InMemoryTableScan, and the cache-population
+      // exchanges behind it shift the measured count.
+      val m = InventoryRuns(spark, sfDir, name).shuffle
       info(s"$name: $m")
       assert(m.exchanges <= budget,
         s"$name grew a shuffle: ${m.exchanges} exchanges > budget $budget")

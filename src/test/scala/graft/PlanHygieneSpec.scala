@@ -1,14 +1,27 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-
-/** Scale discipline enforced on every registered query's physical plan:
-  * no nested-loop or cartesian joins sneak in, except in the operators
-  * that are intentionally quadratic ground-truth baselines over bounded
-  * subsets.
+/** Scale discipline enforced on every registered query's physical plan
+  * (as planned, before execution): no nested-loop or cartesian joins
+  * sneak in, except in the operators that are intentionally quadratic
+  * ground-truth baselines over bounded subsets.
   */
-class PlanHygieneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class PlanHygieneSpec extends SparkSpec {
+
+  test("no accidental nested-loop or cartesian joins in the inventory") {
+    val offenders = InventoryRuns(spark, sfDir).toSeq.sortBy(_._1).flatMap {
+      case (name, _) if PlanHygieneSpec.allowed(name) => None
+      case (name, Left(e)) => Some(name -> Seq(s"failed: $e"))
+      case (name, Right(r)) =>
+        if (r.nlJoinsBefore.nonEmpty) Some(name -> r.nlJoinsBefore) else None
+    }
+    assert(offenders.isEmpty,
+      s"quadratic join shapes outside the allowlist: $offenders")
+  }
+}
+
+/** The one NL-join allow-list of the inventory (AqeParitySpec reads it
+  * too). */
+object PlanHygieneSpec {
 
   /** Intentionally quadratic (exact baselines over bounded subsets). */
   private val allowedQuadratic = Set(
@@ -104,19 +117,5 @@ class PlanHygieneSpec extends SparkSpec with AdaptiveSparkPlanHelper {
                                 // rare-gram hot-key cutoff, the
                                 // pipeline_decontaminate shape)
 
-  test("no accidental nested-loop or cartesian joins in the inventory") {
-    val allowed = allowedQuadratic ++ allowedBoundedBroadcast
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) if !allowed(name) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan
-        val bad = collect(plan) {
-          case j: BroadcastNestedLoopJoinExec => j.getClass.getSimpleName
-          case j: CartesianProductExec        => j.getClass.getSimpleName
-        }
-        if (bad.nonEmpty) Some(name -> bad.distinct) else None
-      case _ => None
-    }
-    assert(offenders.isEmpty,
-      s"quadratic join shapes outside the allowlist: $offenders")
-  }
+  val allowed: Set[String] = allowedQuadratic ++ allowedBoundedBroadcast
 }

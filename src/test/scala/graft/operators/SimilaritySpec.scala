@@ -666,33 +666,34 @@ class SimilaritySpec extends SparkSpec {
       (v, base.toSeq)
     }
     val df = members.toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_oracle")
-    df.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val got = Similarity.kmeansConverged(df).collect()
-    assert(got.forall(_.getInt(5) == 2),
-      "fixture must actually early-exit (n_iters = 2)")
-    val gotRows = got
-      .map(_.toSeq.map(String.valueOf).mkString("\t")).toSeq.sorted
-    val sqlFile = java.nio.file.Files.createTempFile("kmeans", ".sql")
-    java.nio.file.Files.writeString(sqlFile,
-      graft.SparkEntry.oracleSql("emb_kmeans_converged"))
-    val script =
-      """import sys, duckdb
-        |sql = open(sys.argv[1]).read()
-        |con = duckdb.connect()
-        |con.execute("SET enable_progress_bar = false")
-        |con.execute("CREATE VIEW embeddings AS SELECT * FROM "
-        |            f"read_parquet('{sys.argv[2]}/embeddings.parquet/*.parquet')")
-        |for row in con.execute(sql).fetchall():
-        |    print('\t'.join(str(x) for x in row))
-        |""".stripMargin
-    val (code, out) = run("python3", "-c", script,
-      sqlFile.toString, dir.toString)
-    assert(code == 0, s"oracle run failed:\n$out")
-    val oracleRows = out.linesIterator.filter(_.nonEmpty).toSeq.sorted
-    assert(oracleRows == gotRows,
-      s"early-exit vs 6-step-unroll divergence:\n" +
-        s"spark=${gotRows.take(3)}\noracle=${oracleRows.take(3)}")
+    withTempDir("kmeans_oracle") { dir =>
+      df.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      val got = Similarity.kmeansConverged(df).collect()
+      assert(got.forall(_.getInt(5) == 2),
+        "fixture must actually early-exit (n_iters = 2)")
+      val gotRows = got
+        .map(_.toSeq.map(String.valueOf).mkString("\t")).toSeq.sorted
+      val sqlFile = java.nio.file.Path.of(dir, "oracle.sql")
+      java.nio.file.Files.writeString(sqlFile,
+        graft.SparkEntry.oracleSql("emb_kmeans_converged"))
+      val script =
+        """import sys, duckdb
+          |sql = open(sys.argv[1]).read()
+          |con = duckdb.connect()
+          |con.execute("SET enable_progress_bar = false")
+          |con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+          |            f"read_parquet('{sys.argv[2]}/embeddings.parquet/*.parquet')")
+          |for row in con.execute(sql).fetchall():
+          |    print('\t'.join(str(x) for x in row))
+          |""".stripMargin
+      val (code, out) = run("python3", "-c", script,
+        sqlFile.toString, dir)
+      assert(code == 0, s"oracle run failed:\n$out")
+      val oracleRows = out.linesIterator.filter(_.nonEmpty).toSeq.sorted
+      assert(oracleRows == gotRows,
+        s"early-exit vs 6-step-unroll divergence:\n" +
+          s"spark=${gotRows.take(3)}\noracle=${oracleRows.take(3)}")
+    }
   }
 
   private def sdiv(x: Long, d: Long): Long = if (x < 0) -((-x) / d) else x / d

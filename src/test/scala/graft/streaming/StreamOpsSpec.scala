@@ -659,83 +659,83 @@ class StreamOpsSpec extends SparkSpec {
   test("crawlIngestStream: segments dropped into a watched directory " +
       "across micro-batches extract identically to the batch query " +
       "over the same files") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_crawl_stream").toFile
-    dir.deleteOnExit()
-    def words(p: String, n: Int) =
-      (1 to n).map(i => s"$p$i").mkString(" ")
-    def seg(name: String, recs: Seq[(Long, String, String)]): Unit =
-      java.nio.file.Files.write(dir.toPath.resolve(name),
-        graft.operators.Crawl.encodeArchive(recs))
-    def page(id: Long, body: String) =
-      graft.operators.Crawl.wrapHtml(id, body)
-    val b1 = Seq(
-      (1L, "https://a.example.org/1", page(1L, words("alpha", 20))),
-      (2L, "https://a.example.org/2", page(2L, words("beta", 14))))
-    val b2 = Seq(
-      (3L, "https://b.example.org/3", page(3L, words("gamma", 30))))
-    val query = StreamOps.crawlIngestStream(spark, dir.getAbsolutePath)
-      .writeStream.format("memory").queryName("crawl_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      seg("part0.garc", b1)
-      query.processAllAvailable()
-      assert(spark.table("crawl_stream").count() == 2L)
-      seg("part1.garc", b2)
-      query.processAllAvailable()
-      val streamed = spark.table("crawl_stream").collect()
-        .map(_.toSeq).toSet
-      val batch = graft.operators.Crawl.extractText(
-          graft.operators.Crawl.parseArchives(spark,
-            s"${dir.getAbsolutePath}/*.garc"))
-        .collect().map(_.toSeq).toSet
-      assert(streamed == batch,
-        s"stream/batch extraction diverged: $streamed vs $batch")
-      assert(streamed.size == 3)
-    } finally query.stop()
+    withTempDir("graft_crawl_stream") { d =>
+      val dir = new java.io.File(d)
+      def words(p: String, n: Int) =
+        (1 to n).map(i => s"$p$i").mkString(" ")
+      def seg(name: String, recs: Seq[(Long, String, String)]): Unit =
+        java.nio.file.Files.write(dir.toPath.resolve(name),
+          graft.operators.Crawl.encodeArchive(recs))
+      def page(id: Long, body: String) =
+        graft.operators.Crawl.wrapHtml(id, body)
+      val b1 = Seq(
+        (1L, "https://a.example.org/1", page(1L, words("alpha", 20))),
+        (2L, "https://a.example.org/2", page(2L, words("beta", 14))))
+      val b2 = Seq(
+        (3L, "https://b.example.org/3", page(3L, words("gamma", 30))))
+      val query = StreamOps.crawlIngestStream(spark, dir.getAbsolutePath)
+        .writeStream.format("memory").queryName("crawl_stream")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        seg("part0.garc", b1)
+        query.processAllAvailable()
+        assert(spark.table("crawl_stream").count() == 2L)
+        seg("part1.garc", b2)
+        query.processAllAvailable()
+        val streamed = spark.table("crawl_stream").collect()
+          .map(_.toSeq).toSet
+        val batch = graft.operators.Crawl.extractText(
+            graft.operators.Crawl.parseArchives(spark,
+              s"${dir.getAbsolutePath}/*.garc"))
+          .collect().map(_.toSeq).toSet
+        assert(streamed == batch,
+          s"stream/batch extraction diverged: $streamed vs $batch")
+        assert(streamed.size == 3)
+      } finally query.stop()
+    }
   }
 
   test("warcIngestStream: gz WARC segments arriving across " +
       "micro-batches extract identically to the batch query over the " +
       "same files") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_warc_stream").toFile
-    dir.deleteOnExit()
-    def words(p: String, n: Int) =
-      (1 to n).map(i => s"$p$i").mkString(" ")
-    def seg(name: String, docs: Seq[(Long, String)]): Unit = {
-      val members = docs.map { case (id, body) =>
-        graft.operators.Crawl.gzipMember(
-          graft.operators.Crawl.encodeWarcRecord(Seq(
-            "WARC-Type" -> "response",
-            "WARC-Target-URI" -> s"https://a.example.org/doc/$id",
-            "Content-Type" -> "application/http; msgtype=response"),
-            (s"HTTP/1.1 200 OK\r\n\r\n" +
-              graft.operators.Crawl.wrapHtml(id, body)).getBytes))
+    withTempDir("graft_warc_stream") { d =>
+      val dir = new java.io.File(d)
+      def words(p: String, n: Int) =
+        (1 to n).map(i => s"$p$i").mkString(" ")
+      def seg(name: String, docs: Seq[(Long, String)]): Unit = {
+        val members = docs.map { case (id, body) =>
+          graft.operators.Crawl.gzipMember(
+            graft.operators.Crawl.encodeWarcRecord(Seq(
+              "WARC-Type" -> "response",
+              "WARC-Target-URI" -> s"https://a.example.org/doc/$id",
+              "Content-Type" -> "application/http; msgtype=response"),
+              (s"HTTP/1.1 200 OK\r\n\r\n" +
+                graft.operators.Crawl.wrapHtml(id, body)).getBytes))
+        }
+        java.nio.file.Files.write(dir.toPath.resolve(name),
+          members.toArray.flatten)
       }
-      java.nio.file.Files.write(dir.toPath.resolve(name),
-        members.toArray.flatten)
+      val query = StreamOps.warcIngestStream(spark, dir.getAbsolutePath)
+        .writeStream.format("memory").queryName("warc_stream")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        seg("part0.warc.gz", Seq(1L -> words("alpha", 20),
+          2L -> words("beta", 14)))
+        query.processAllAvailable()
+        assert(spark.table("warc_stream").count() == 2L)
+        seg("part1.warc.gz", Seq(3L -> words("gamma", 30)))
+        query.processAllAvailable()
+        val streamed = spark.table("warc_stream").collect()
+          .map(_.toSeq).toSet
+        val batch = graft.operators.Crawl.warcDocs(
+            graft.operators.Crawl.parseWarcSegments(spark,
+              s"${dir.getAbsolutePath}/*.warc.gz"))
+          .collect().map(_.toSeq).toSet
+        assert(streamed == batch,
+          s"stream/batch extraction diverged: $streamed vs $batch")
+        assert(streamed.size == 3)
+      } finally query.stop()
     }
-    val query = StreamOps.warcIngestStream(spark, dir.getAbsolutePath)
-      .writeStream.format("memory").queryName("warc_stream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      seg("part0.warc.gz", Seq(1L -> words("alpha", 20),
-        2L -> words("beta", 14)))
-      query.processAllAvailable()
-      assert(spark.table("warc_stream").count() == 2L)
-      seg("part1.warc.gz", Seq(3L -> words("gamma", 30)))
-      query.processAllAvailable()
-      val streamed = spark.table("warc_stream").collect()
-        .map(_.toSeq).toSet
-      val batch = graft.operators.Crawl.warcDocs(
-          graft.operators.Crawl.parseWarcSegments(spark,
-            s"${dir.getAbsolutePath}/*.warc.gz"))
-        .collect().map(_.toSeq).toSet
-      assert(streamed == batch,
-        s"stream/batch extraction diverged: $streamed vs $batch")
-      assert(streamed.size == 3)
-    } finally query.stop()
   }
 
   test("incrementalImageDedupStream: 3-batch feed equals the batch " +
@@ -814,120 +814,122 @@ class StreamOpsSpec extends SparkSpec {
   test("wetWriteStream: micro-batches accumulate batch-id-keyed WET " +
       "shards; the read-back union equals everything fed") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_wet_stream").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_wet_stream_ckpt").toString
-    val src = MemoryStream[(Long, String, String)]
-    val query = StreamOps.wetWriteStream(
-      src.toDF().toDF("doc_id", "url", "text"), dir, ckpt)
-    try {
-      src.addData((1L, "https://a.example.org/doc/1", "first batch text"),
-        (2L, "https://a.example.org/doc/2", "more first batch"))
-      query.processAllAvailable()
-      src.addData((3L, "https://b.example.org/doc/3", "second batch"))
-      query.processAllAvailable()
-      val names = new java.io.File(dir).listFiles().map(_.getName).toSeq
-      assert(names.nonEmpty &&
-        names.forall(_.matches("part-\\d{5}-\\d{5}\\.warc\\.gz")),
-        s"batch-id-keyed shard names expected, got $names")
-      assert(names.exists(_.startsWith("part-00000-")) &&
-        names.exists(_.startsWith("part-00001-")),
-        s"each batch must own its shards: $names")
-      val back = graft.operators.Crawl
-        .parseWetSegments(spark, s"$dir/*.warc.gz")
-        .as[(String, String)].collect().toSet
-      assert(back == Set(
-        ("https://a.example.org/doc/1", "first batch text"),
-        ("https://a.example.org/doc/2", "more first batch"),
-        ("https://b.example.org/doc/3", "second batch")))
-    } finally query.stop()
+    withTempDir("graft_wet_stream") { dir =>
+      withTempDir("graft_wet_stream_ckpt") { ckpt =>
+        val src = MemoryStream[(Long, String, String)]
+        val query = StreamOps.wetWriteStream(
+          src.toDF().toDF("doc_id", "url", "text"), dir, ckpt)
+        try {
+          src.addData((1L, "https://a.example.org/doc/1", "first batch text"),
+            (2L, "https://a.example.org/doc/2", "more first batch"))
+          query.processAllAvailable()
+          src.addData((3L, "https://b.example.org/doc/3", "second batch"))
+          query.processAllAvailable()
+          val names = new java.io.File(dir).listFiles().map(_.getName).toSeq
+          assert(names.nonEmpty &&
+            names.forall(_.matches("part-\\d{5}-\\d{5}\\.warc\\.gz")),
+            s"batch-id-keyed shard names expected, got $names")
+          assert(names.exists(_.startsWith("part-00000-")) &&
+            names.exists(_.startsWith("part-00001-")),
+            s"each batch must own its shards: $names")
+          val back = graft.operators.Crawl
+            .parseWetSegments(spark, s"$dir/*.warc.gz")
+            .as[(String, String)].collect().toSet
+          assert(back == Set(
+            ("https://a.example.org/doc/1", "first batch text"),
+            ("https://a.example.org/doc/2", "more first batch"),
+            ("https://b.example.org/doc/3", "second batch")))
+        } finally query.stop()
+      }
+    }
   }
 
   test("writeWetShardsForBatch is idempotent PER BATCH: a replay with " +
       "a different partition count replaces exactly its own shards " +
       "and never touches another batch's") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_wet_replay").toString
-    val b4 = Seq((40L, "https://a.example.org/doc/40", "batch four"))
-      .toDF("doc_id", "url", "text").coalesce(1)
-    val b5wide = (50L to 55L)
-      .map(i => (i, s"https://a.example.org/doc/$i", s"five $i"))
-      .toDF("doc_id", "url", "text").repartition(4)
-    graft.operators.Crawl.writeWetShardsForBatch(b4, dir, 4L)
-    graft.operators.Crawl.writeWetShardsForBatch(b5wide, dir, 5L)
-    val wide = new java.io.File(dir).listFiles().map(_.getName)
-      .count(_.startsWith("part-00005-"))
-    assert(wide > 1, "fixture needs a multi-shard first attempt")
-    // the REPLAY of batch 5 lands narrower (1 partition)
-    val b5narrow = (50L to 55L)
-      .map(i => (i, s"https://a.example.org/doc/$i", s"five $i"))
-      .toDF("doc_id", "url", "text").coalesce(1)
-    graft.operators.Crawl.writeWetShardsForBatch(b5narrow, dir, 5L)
-    val names = new java.io.File(dir).listFiles().map(_.getName).toSeq
-    assert(names.count(_.startsWith("part-00005-")) == 1,
-      s"stale wide-attempt shards must be cleared on replay: $names")
-    assert(names.count(_.startsWith("part-00004-")) == 1,
-      s"other batches' shards must never be touched: $names")
-    val back = graft.operators.Crawl
-      .parseWetSegments(spark, s"$dir/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    assert(back == ((50L to 55L).map(i =>
-      (s"https://a.example.org/doc/$i", s"five $i")).toSet +
-      (("https://a.example.org/doc/40", "batch four"))))
+    withTempDir("graft_wet_replay") { dir =>
+      val b4 = Seq((40L, "https://a.example.org/doc/40", "batch four"))
+        .toDF("doc_id", "url", "text").coalesce(1)
+      val b5wide = (50L to 55L)
+        .map(i => (i, s"https://a.example.org/doc/$i", s"five $i"))
+        .toDF("doc_id", "url", "text").repartition(4)
+      graft.operators.Crawl.writeWetShardsForBatch(b4, dir, 4L)
+      graft.operators.Crawl.writeWetShardsForBatch(b5wide, dir, 5L)
+      val wide = new java.io.File(dir).listFiles().map(_.getName)
+        .count(_.startsWith("part-00005-"))
+      assert(wide > 1, "fixture needs a multi-shard first attempt")
+      // the REPLAY of batch 5 lands narrower (1 partition)
+      val b5narrow = (50L to 55L)
+        .map(i => (i, s"https://a.example.org/doc/$i", s"five $i"))
+        .toDF("doc_id", "url", "text").coalesce(1)
+      graft.operators.Crawl.writeWetShardsForBatch(b5narrow, dir, 5L)
+      val names = new java.io.File(dir).listFiles().map(_.getName).toSeq
+      assert(names.count(_.startsWith("part-00005-")) == 1,
+        s"stale wide-attempt shards must be cleared on replay: $names")
+      assert(names.count(_.startsWith("part-00004-")) == 1,
+        s"other batches' shards must never be touched: $names")
+      val back = graft.operators.Crawl
+        .parseWetSegments(spark, s"$dir/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      assert(back == ((50L to 55L).map(i =>
+        (s"https://a.example.org/doc/$i", s"five $i")).toSet +
+        (("https://a.example.org/doc/40", "batch four"))))
+    }
   }
 
   test("crawlTriangleStream: ingest → URL dedup → WET write COMPOSED — " +
       "the multi-batch WET corpus equals the batch " +
       "pipeline_url_prepare front over the same segments, with " +
       "in-batch AND cross-batch respellings collapsed") {
-    val root = java.nio.file.Files.createTempDirectory("graft_triangle")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    val idx = root.resolve("idx").toString
-    val wet = root.resolve("wet").toString
-    val ckpt = root.resolve("ckpt").toString
-    def words(p: String) = (1 to 15).map(i => s"$p$i").mkString(" ")
-    def page(id: Long, url: String, seed: String) =
-      (id, url, graft.operators.Crawl.wrapHtml(id, seed))
-    val seg0 = Seq(
-      page(80L, "https://a.example.org/doc/8", words("aa")),
-      // in-batch respelling of 80 (case + default port + fragment)
-      page(81L, "HTTPS://A.EXAMPLE.ORG:443/doc/8#top", words("aa")),
-      page(88L, "https://b.example.org/doc/9", words("bb")))
-    val seg1 = Seq(
-      // CROSS-BATCH respelling of 80 (trailing slash): must drop via
-      // the durable seen-set, not the in-batch keeper rule
-      page(90L, "https://a.example.org/doc/8/", words("aa")),
-      page(91L, "https://c.example.org/doc/10", words("cc")),
-      // in-batch respelling of 91 (tracking param)
-      page(92L, "https://c.example.org/doc/10?utm_source=x", words("cc")))
-    java.nio.file.Files.write(in.resolve("part0.garc"),
-      graft.operators.Crawl.encodeArchive(seg0))
-    val query = StreamOps.crawlTriangleStream(spark, in.toString, idx,
-      Seq.empty[String].toDF("canon_url"), wet, ckpt)
-    try {
-      query.processAllAvailable()
-      java.nio.file.Files.write(in.resolve("part1.garc"),
-        graft.operators.Crawl.encodeArchive(seg1))
-      query.processAllAvailable()
-    } finally query.stop()
-    val streamed = graft.operators.Crawl
-      .parseWetSegments(spark, s"$wet/*.warc.gz")
-      .as[(String, String)].collect().toSet
-    // the batch front: keeper per canonical URL over ALL records at
-    // once, then the shared extraction — pipeline_url_prepare's stages
-    // before the composed prepare
-    val batchFront = graft.operators.Crawl.extractText(
-        graft.operators.Crawl.urlKeeperRecords(
-          graft.operators.Crawl.parseArchives(spark, s"$in/*.garc")))
-      .select("url", "text").as[(String, String)].collect().toSet
-    assert(streamed == batchFront,
-      s"stream/batch front diverged: $streamed vs $batchFront")
-    assert(streamed.map(_._1) == Set(
-      "https://a.example.org/doc/8", "https://b.example.org/doc/9",
-      "https://c.example.org/doc/10"),
-      s"one WET record per canonical page, first spelling wins: " +
-        s"${streamed.map(_._1)}")
+    withTempDir("graft_triangle") { d =>
+      val root = java.nio.file.Path.of(d)
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val idx = root.resolve("idx").toString
+      val wet = root.resolve("wet").toString
+      val ckpt = root.resolve("ckpt").toString
+      def words(p: String) = (1 to 15).map(i => s"$p$i").mkString(" ")
+      def page(id: Long, url: String, seed: String) =
+        (id, url, graft.operators.Crawl.wrapHtml(id, seed))
+      val seg0 = Seq(
+        page(80L, "https://a.example.org/doc/8", words("aa")),
+        // in-batch respelling of 80 (case + default port + fragment)
+        page(81L, "HTTPS://A.EXAMPLE.ORG:443/doc/8#top", words("aa")),
+        page(88L, "https://b.example.org/doc/9", words("bb")))
+      val seg1 = Seq(
+        // CROSS-BATCH respelling of 80 (trailing slash): must drop via
+        // the durable seen-set, not the in-batch keeper rule
+        page(90L, "https://a.example.org/doc/8/", words("aa")),
+        page(91L, "https://c.example.org/doc/10", words("cc")),
+        // in-batch respelling of 91 (tracking param)
+        page(92L, "https://c.example.org/doc/10?utm_source=x", words("cc")))
+      java.nio.file.Files.write(in.resolve("part0.garc"),
+        graft.operators.Crawl.encodeArchive(seg0))
+      val query = StreamOps.crawlTriangleStream(spark, in.toString, idx,
+        Seq.empty[String].toDF("canon_url"), wet, ckpt)
+      try {
+        query.processAllAvailable()
+        java.nio.file.Files.write(in.resolve("part1.garc"),
+          graft.operators.Crawl.encodeArchive(seg1))
+        query.processAllAvailable()
+      } finally query.stop()
+      val streamed = graft.operators.Crawl
+        .parseWetSegments(spark, s"$wet/*.warc.gz")
+        .as[(String, String)].collect().toSet
+      // the batch front: keeper per canonical URL over ALL records at
+      // once, then the shared extraction — pipeline_url_prepare's stages
+      // before the composed prepare
+      val batchFront = graft.operators.Crawl.extractText(
+          graft.operators.Crawl.urlKeeperRecords(
+            graft.operators.Crawl.parseArchives(spark, s"$in/*.garc")))
+        .select("url", "text").as[(String, String)].collect().toSet
+      assert(streamed == batchFront,
+        s"stream/batch front diverged: $streamed vs $batchFront")
+      assert(streamed.map(_._1) == Set(
+        "https://a.example.org/doc/8", "https://b.example.org/doc/9",
+        "https://c.example.org/doc/10"),
+        s"one WET record per canonical page, first spelling wins: " +
+          s"${streamed.map(_._1)}")
+    }
   }
 
   test("crawlPrepareStream: the triangle EXTENDED with the full content " +
@@ -937,168 +939,170 @@ class StreamOpsSpec extends SparkSpec {
       "batch composition over the same segments, with every engineered " +
       "casualty dropping at its own stage") {
     import org.apache.spark.sql.DataFrame
-    val root = java.nio.file.Files.createTempDirectory("graft_cprep")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    val urlIdx = root.resolve("uidx").toString
-    val sigIdx = root.resolve("gidx").toString
-    val subIdx = root.resolve("sidx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val labeled = (0L until 20L).map { i =>
-      val lang = if (i % 2 == 0) "aa" else "bb"
-      val t = if (lang == "aa") "red green blue red green blue"
-        else "eins zwei drei eins zwei drei"
-      (i, lang, t)
-    }.toDF("doc_id", "lang", "text")
-    // pure-alpha unique tokens (the extraction's content-line rule
-    // only keeps [A-Za-z]+ words — digit-bearing tokens vanish)
-    def uniq(p: String, n: Int) = (0 until n).map(i =>
-      s"$p${('a' + i / 26).toChar}${('a' + i % 26).toChar}").mkString(" ")
-    // the static decontamination eval set: 40 unique tokens => 36
-    // distinct 5-grams, each eval-df 1 (all rare within eval)
-    val evTokens = uniq("ev", 40).split(" ")
-    val evalDocs = Seq((9000L, evTokens.mkString(" ")))
-      .toDF("doc_id", "text")
-    val policy = graft.operators.Crawl.defaultPolicy(spark)
-    // the stateless per-doc gate: a fixed token-count rule (a frozen
-    // trained threshold has the same stateless shape)
-    val gate: DataFrame => DataFrame =
-      d => d.where(size(split(col("text"), "\\s+")) >= 25)
-    def aa(n: Int) = Seq.fill(n / 3 + 1)("red green blue")
-      .mkString(" ").split(" ").take(n).mkString(" ")
-    def bb(n: Int) = Seq.fill(n / 3 + 1)("eins zwei drei")
-      .mkString(" ").split(" ").take(n).mkString(" ")
-    // pure-alpha span tokens, same reason
-    val spanS = (0 until 50).map(i =>
-      s"sp${('a' + i / 26).toChar}${('a' + i % 26).toChar}").mkString(" ")
-    def page(id: Long, url: String, body: String) =
-      (id, url, graft.operators.Crawl.wrapHtml(id, body))
-    val ndBody = s"${aa(6)} ${uniq("n", 34)}"         // 40 tokens
-    val ndBodyNear = s"${aa(6)} ${uniq("n", 33)} nxx" // last token differs
-    val seg0 = Seq(
-      page(100L, "https://a.example.org/doc/1", s"${aa(30)} $spanS"),
-      // in-batch respelling of 100 — collapses to the id-100 keeper
-      page(101L, "HTTPS://A.EXAMPLE.ORG:443/doc/1#top",
-        s"${aa(30)} $spanS"),
-      page(102L, "https://b.example.org/doc/2", bb(30)),
-      // gate casualty: 4 content tokens — under the 25-token rule
-      // even with extraction boilerplate riding along
-      page(103L, "https://a.example.org/doc/3", aa(4)),
-      // the near-dup pair's FIRST sighting (batch 0)
-      page(110L, "https://a.example.org/doc/4", ndBody))
-    val seg1 = Seq(
-      // CROSS-BATCH respelling of 100 — must drop via the DURABLE
-      // URL seen-set, not the in-batch keeper rule
-      page(200L, "https://a.example.org/doc/1/", s"${aa(30)} $spanS"),
-      // fresh page whose spanS copy must be cleaned by the DURABLE
-      // substr index (first seen in batch 0); the unique filler keeps
-      // its shingle Jaccard vs 100 far below the near-dup threshold.
-      // 204 body words — a 12-multiple, so wrapHtml's paragraph
-      // chunking leaves no <3-word orphan line for the scrub rule to
-      // drop (which would truncate spanS's tail)
-      page(201L, "https://c.example.org/doc/4",
-        s"${aa(6)} ${uniq("u", 148)} $spanS"),
-      page(202L, "https://c.example.org/doc/5",
-        s"${bb(6)} ${uniq("m", 30)}"),
-      // DOMAIN-GATE casualties and the allow override (r15): an exact
-      // blocked host, a subdomain of a blocked domain, and the
-      // allowlisted host that is ALSO on the blocked-host list
-      page(203L, "https://malware.badhost.example/doc/6", aa(30)),
-      page(204L, "https://research.tracker.net/doc/7",
-        s"${bb(6)} ${uniq("p", 30)}"),
-      page(205L, "https://cdn.tracker.net/doc/8", bb(30)),
-      // CROSS-BATCH near-copy of 110 — must drop via the DURABLE
-      // MinHash signature index (one token changed; est >> 0.8)
-      page(210L, "https://d.example.org/doc/9", ndBodyNear),
-      // CONTAMINATED doc arriving in a later batch: a contiguous
-      // 20-token run of the eval doc => 16 shared rare 5-grams >= 3
-      page(211L, "https://d.example.org/doc/10",
-        s"${aa(30)} ${evTokens.slice(10, 30).mkString(" ")}"))
-    java.nio.file.Files.write(in.resolve("part0.garc"),
-      graft.operators.Crawl.encodeArchive(seg0))
-    val got = scala.collection.mutable.Map
-      .empty[Long, Set[(Long, String, String, Long, Long)]]
-    val query = StreamOps.crawlPrepareStream(spark, in.toString,
-      labeled, gate, policy, evalDocs, urlIdx, sigIdx, subIdx,
-      Seq.empty[String].toDF("canon_url"),
-      Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig"),
-      Seq.empty[String].toDF("h"), ckpt) { (batch, id) =>
-      got(id) = batch
+    withTempDir("graft_cprep") { d =>
+      val root = java.nio.file.Path.of(d)
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val urlIdx = root.resolve("uidx").toString
+      val sigIdx = root.resolve("gidx").toString
+      val subIdx = root.resolve("sidx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val labeled = (0L until 20L).map { i =>
+        val lang = if (i % 2 == 0) "aa" else "bb"
+        val t = if (lang == "aa") "red green blue red green blue"
+          else "eins zwei drei eins zwei drei"
+        (i, lang, t)
+      }.toDF("doc_id", "lang", "text")
+      // pure-alpha unique tokens (the extraction's content-line rule
+      // only keeps [A-Za-z]+ words — digit-bearing tokens vanish)
+      def uniq(p: String, n: Int) = (0 until n).map(i =>
+        s"$p${('a' + i / 26).toChar}${('a' + i % 26).toChar}").mkString(" ")
+      // the static decontamination eval set: 40 unique tokens => 36
+      // distinct 5-grams, each eval-df 1 (all rare within eval)
+      val evTokens = uniq("ev", 40).split(" ")
+      val evalDocs = Seq((9000L, evTokens.mkString(" ")))
+        .toDF("doc_id", "text")
+      val policy = graft.operators.Crawl.defaultPolicy(spark)
+      // the stateless per-doc gate: a fixed token-count rule (a frozen
+      // trained threshold has the same stateless shape)
+      val gate: DataFrame => DataFrame =
+        d => d.where(size(split(col("text"), "\\s+")) >= 25)
+      def aa(n: Int) = Seq.fill(n / 3 + 1)("red green blue")
+        .mkString(" ").split(" ").take(n).mkString(" ")
+      def bb(n: Int) = Seq.fill(n / 3 + 1)("eins zwei drei")
+        .mkString(" ").split(" ").take(n).mkString(" ")
+      // pure-alpha span tokens, same reason
+      val spanS = (0 until 50).map(i =>
+        s"sp${('a' + i / 26).toChar}${('a' + i % 26).toChar}").mkString(" ")
+      def page(id: Long, url: String, body: String) =
+        (id, url, graft.operators.Crawl.wrapHtml(id, body))
+      val ndBody = s"${aa(6)} ${uniq("n", 34)}"         // 40 tokens
+      val ndBodyNear = s"${aa(6)} ${uniq("n", 33)} nxx" // last token differs
+      val seg0 = Seq(
+        page(100L, "https://a.example.org/doc/1", s"${aa(30)} $spanS"),
+        // in-batch respelling of 100 — collapses to the id-100 keeper
+        page(101L, "HTTPS://A.EXAMPLE.ORG:443/doc/1#top",
+          s"${aa(30)} $spanS"),
+        page(102L, "https://b.example.org/doc/2", bb(30)),
+        // gate casualty: 4 content tokens — under the 25-token rule
+        // even with extraction boilerplate riding along
+        page(103L, "https://a.example.org/doc/3", aa(4)),
+        // the near-dup pair's FIRST sighting (batch 0)
+        page(110L, "https://a.example.org/doc/4", ndBody))
+      val seg1 = Seq(
+        // CROSS-BATCH respelling of 100 — must drop via the DURABLE
+        // URL seen-set, not the in-batch keeper rule
+        page(200L, "https://a.example.org/doc/1/", s"${aa(30)} $spanS"),
+        // fresh page whose spanS copy must be cleaned by the DURABLE
+        // substr index (first seen in batch 0); the unique filler keeps
+        // its shingle Jaccard vs 100 far below the near-dup threshold.
+        // 204 body words — a 12-multiple, so wrapHtml's paragraph
+        // chunking leaves no <3-word orphan line for the scrub rule to
+        // drop (which would truncate spanS's tail)
+        page(201L, "https://c.example.org/doc/4",
+          s"${aa(6)} ${uniq("u", 148)} $spanS"),
+        page(202L, "https://c.example.org/doc/5",
+          s"${bb(6)} ${uniq("m", 30)}"),
+        // DOMAIN-GATE casualties and the allow override (r15): an exact
+        // blocked host, a subdomain of a blocked domain, and the
+        // allowlisted host that is ALSO on the blocked-host list
+        page(203L, "https://malware.badhost.example/doc/6", aa(30)),
+        page(204L, "https://research.tracker.net/doc/7",
+          s"${bb(6)} ${uniq("p", 30)}"),
+        page(205L, "https://cdn.tracker.net/doc/8", bb(30)),
+        // CROSS-BATCH near-copy of 110 — must drop via the DURABLE
+        // MinHash signature index (one token changed; est >> 0.8)
+        page(210L, "https://d.example.org/doc/9", ndBodyNear),
+        // CONTAMINATED doc arriving in a later batch: a contiguous
+        // 20-token run of the eval doc => 16 shared rare 5-grams >= 3
+        page(211L, "https://d.example.org/doc/10",
+          s"${aa(30)} ${evTokens.slice(10, 30).mkString(" ")}"))
+      java.nio.file.Files.write(in.resolve("part0.garc"),
+        graft.operators.Crawl.encodeArchive(seg0))
+      val got = scala.collection.mutable.Map
+        .empty[Long, Set[(Long, String, String, Long, Long)]]
+      val query = StreamOps.crawlPrepareStream(spark, in.toString,
+        labeled, gate, policy, evalDocs, urlIdx, sigIdx, subIdx,
+        Seq.empty[String].toDF("canon_url"),
+        Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig"),
+        Seq.empty[String].toDF("h"), ckpt) { (batch, id) =>
+        got(id) = batch
+          .select("doc_id", "url", "lang", "n_tokens", "n_removed")
+          .collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+            r.getLong(3), r.getLong(4))).toSet
+      }
+      try {
+        query.processAllAvailable()
+        java.nio.file.Files.write(in.resolve("part1.garc"),
+          graft.operators.Crawl.encodeArchive(seg1))
+        query.processAllAvailable()
+      } finally query.stop()
+      val streamed = got.values.flatten.toSet
+      // the batch composition over the same segments, in the STREAM's
+      // stage order: URL keepers over ALL records at once, the domain
+      // gate, extraction, routing on RAW text (the registered
+      // pipeline_crawl_prepare_langid order), scrub, the same content
+      // gate, batch keep-min near-dup, the static-plane decon flag,
+      // then the batch incremental substr over the union (empty old
+      // side) — equal for doc_id-ordered batches
+      val recs = graft.operators.Crawl
+        .parseArchives(spark, s"$in/*.garc")
+      val hostGated = graft.operators.Crawl.domainGate(
+        graft.operators.Crawl.urlKeeperRecords(recs), "url", policy)
+      val raw = graft.operators.Crawl.extractText(hostGated)
+        .localCheckpoint()
+      val routed = graft.operators.NbLangid
+        .route(labeled, raw.select("doc_id", "text"))
+      val docs = graft.operators.TextAnalysis.scrubbed(raw)
+      val gated = gate(docs.join(routed, Seq("doc_id"))
+        .select(col("doc_id"), col("url"),
+          col("pred").as("lang"), col("text")))
+      val ndLosers = graft.operators.Dedup
+        .minhashPairs(gated.select("doc_id", "text"))
+        .select(col("doc_b").as("doc_id")).distinct()
+      val deduped = gated.join(ndLosers, Seq("doc_id"), "left_anti")
+      val plane = graft.operators.TextAnalysis.deconPlane(evalDocs)
+      val flagged = graft.operators.TextAnalysis
+        .deconFlagged(deduped.select("doc_id", "text"), plane)
+      val train = deduped.join(flagged, Seq("doc_id"), "left_anti")
+      val cleaned = graft.operators.Dedup.exactSubstrIncremental(
+        train.select("doc_id", "text"),
+        Seq.empty[(Long, String)].toDF("doc_id", "text"))
+      val batchOut = train.select("doc_id", "url", "lang")
+        .join(cleaned, Seq("doc_id"))
         .select("doc_id", "url", "lang", "n_tokens", "n_removed")
         .collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(3), r.getLong(4))).toSet
+      assert(streamed == batchOut,
+        s"stream/batch prepare diverged:\n$streamed\nvs\n$batchOut")
+      // the engineered casualties really happened, stage by stage
+      val ids = streamed.map(_._1)
+      assert(!ids.contains(101L) && !ids.contains(200L),
+        s"in-batch AND cross-batch URL respellings must drop: $ids")
+      assert(!ids.contains(103L), s"the gate casualty must drop: $ids")
+      assert(!ids.contains(203L) && !ids.contains(205L),
+        s"the blocked host AND the blocked-domain subdomain must drop " +
+          s"at the domain gate: $ids")
+      assert(ids.contains(204L),
+        s"the allowlisted host must beat both block lists: $ids")
+      assert(ids.contains(110L) && !ids.contains(210L),
+        s"the cross-batch near-copy must drop via the DURABLE signature " +
+          s"index (first sighting survives): $ids")
+      assert(!ids.contains(211L),
+        s"the contaminated doc arriving in a later batch must drop via " +
+          s"the static decon plane: $ids")
+      val byId = streamed.map(t => t._1 -> t).toMap
+      assert(byId(100L)._3 == "aa" && byId(201L)._3 == "aa" &&
+        byId(102L)._3 == "bb" && byId(202L)._3 == "bb" &&
+        byId(204L)._3 == "bb",
+        s"the static router must label every kept doc: $streamed")
+      assert(byId(100L)._5 == 0L,
+        s"spanS's first occurrence must survive: ${byId(100L)}")
+      assert(byId(201L)._5 >= 50L,
+        s"the cross-batch spanS copy must be cleaned via the DURABLE " +
+          s"substr index: ${byId(201L)}")
     }
-    try {
-      query.processAllAvailable()
-      java.nio.file.Files.write(in.resolve("part1.garc"),
-        graft.operators.Crawl.encodeArchive(seg1))
-      query.processAllAvailable()
-    } finally query.stop()
-    val streamed = got.values.flatten.toSet
-    // the batch composition over the same segments, in the STREAM's
-    // stage order: URL keepers over ALL records at once, the domain
-    // gate, extraction, routing on RAW text (the registered
-    // pipeline_crawl_prepare_langid order), scrub, the same content
-    // gate, batch keep-min near-dup, the static-plane decon flag,
-    // then the batch incremental substr over the union (empty old
-    // side) — equal for doc_id-ordered batches
-    val recs = graft.operators.Crawl
-      .parseArchives(spark, s"$in/*.garc")
-    val hostGated = graft.operators.Crawl.domainGate(
-      graft.operators.Crawl.urlKeeperRecords(recs), "url", policy)
-    val raw = graft.operators.Crawl.extractText(hostGated)
-      .localCheckpoint()
-    val routed = graft.operators.NbLangid
-      .route(labeled, raw.select("doc_id", "text"))
-    val docs = graft.operators.TextAnalysis.scrubbed(raw)
-    val gated = gate(docs.join(routed, Seq("doc_id"))
-      .select(col("doc_id"), col("url"),
-        col("pred").as("lang"), col("text")))
-    val ndLosers = graft.operators.Dedup
-      .minhashPairs(gated.select("doc_id", "text"))
-      .select(col("doc_b").as("doc_id")).distinct()
-    val deduped = gated.join(ndLosers, Seq("doc_id"), "left_anti")
-    val plane = graft.operators.TextAnalysis.deconPlane(evalDocs)
-    val flagged = graft.operators.TextAnalysis
-      .deconFlagged(deduped.select("doc_id", "text"), plane)
-    val train = deduped.join(flagged, Seq("doc_id"), "left_anti")
-    val cleaned = graft.operators.Dedup.exactSubstrIncremental(
-      train.select("doc_id", "text"),
-      Seq.empty[(Long, String)].toDF("doc_id", "text"))
-    val batchOut = train.select("doc_id", "url", "lang")
-      .join(cleaned, Seq("doc_id"))
-      .select("doc_id", "url", "lang", "n_tokens", "n_removed")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getLong(4))).toSet
-    assert(streamed == batchOut,
-      s"stream/batch prepare diverged:\n$streamed\nvs\n$batchOut")
-    // the engineered casualties really happened, stage by stage
-    val ids = streamed.map(_._1)
-    assert(!ids.contains(101L) && !ids.contains(200L),
-      s"in-batch AND cross-batch URL respellings must drop: $ids")
-    assert(!ids.contains(103L), s"the gate casualty must drop: $ids")
-    assert(!ids.contains(203L) && !ids.contains(205L),
-      s"the blocked host AND the blocked-domain subdomain must drop " +
-        s"at the domain gate: $ids")
-    assert(ids.contains(204L),
-      s"the allowlisted host must beat both block lists: $ids")
-    assert(ids.contains(110L) && !ids.contains(210L),
-      s"the cross-batch near-copy must drop via the DURABLE signature " +
-        s"index (first sighting survives): $ids")
-    assert(!ids.contains(211L),
-      s"the contaminated doc arriving in a later batch must drop via " +
-        s"the static decon plane: $ids")
-    val byId = streamed.map(t => t._1 -> t).toMap
-    assert(byId(100L)._3 == "aa" && byId(201L)._3 == "aa" &&
-      byId(102L)._3 == "bb" && byId(202L)._3 == "bb" &&
-      byId(204L)._3 == "bb",
-      s"the static router must label every kept doc: $streamed")
-    assert(byId(100L)._5 == 0L,
-      s"spanS's first occurrence must survive: ${byId(100L)}")
-    assert(byId(201L)._5 >= 50L,
-      s"the cross-batch spanS copy must be cleaned via the DURABLE " +
-        s"substr index: ${byId(201L)}")
   }
 
   test("ivfIngestStreamDurable + ivfQueryIndex (r16): continuously " +
@@ -1107,83 +1111,85 @@ class StreamOpsSpec extends SparkSpec {
       "survives a hard restart, and the query reads ONLY the probed " +
       "cells' bucket subdirs") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_stream")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    val idx = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val dim = 8
-    // four well-separated direction clusters on orthogonal axes; the
-    // static centroid matrix IS those directions (trained-once epoch)
-    val cents: Seq[Seq[Double]] = (0 until 4).map(c =>
-      (0 until dim).map(d => if (d == c) 1.0 else 0.0))
-    def vec(id: Long): Array[Float] = {
-      val c = (id % 4).toInt
-      val arr = Array.fill(dim)(0.0f)
-      arr(c) = 1.0f
-      arr(c + 4) = 0.01f * (id % 7) // deterministic within-cluster spread
-      arr
+    withTempDir("graft_ivf_stream") { d =>
+      val root = java.nio.file.Path.of(d)
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val idx = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val dim = 8
+      // four well-separated direction clusters on orthogonal axes; the
+      // static centroid matrix IS those directions (trained-once epoch)
+      val cents: Seq[Seq[Double]] = (0 until 4).map(c =>
+        (0 until dim).map(d => if (d == c) 1.0 else 0.0))
+      def vec(id: Long): Array[Float] = {
+        val c = (id % 4).toInt
+        val arr = Array.fill(dim)(0.0f)
+        arr(c) = 1.0f
+        arr(c + 4) = 0.01f * (id % 7) // deterministic within-cluster spread
+        arr
+      }
+      val schema = StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType))))
+      def writeBatch(name: String, ids: Range): Unit =
+        ids.map(i => (i.toLong, vec(i.toLong)))
+          .toDF("vec_id", "embedding").coalesce(1)
+          .write.mode("overwrite").parquet(in.resolve(name).toString)
+      val emptyInit = Seq.empty[(Long, Array[Float])]
+        .toDF("vec_id", "embedding")
+      val seen = scala.collection.mutable.Map.empty[Long, Long]
+      def startQ() = StreamOps.ivfIngestStreamDurable(
+        spark.readStream.schema(schema)
+          .option("pathGlobFilter", "*.parquet")
+          .option("recursiveFileLookup", "true")
+          .parquet(in.toString),
+        idx, cents, emptyInit, ckpt, compactEvery = 2) {
+        (postings, id) => seen(id) = postings.count()
+      }
+      writeBatch("b0", 0 until 10)
+      writeBatch("b1", 10 until 20)
+      val q1 = startQ()
+      try q1.processAllAvailable() finally q1.stop()
+      // HARD RESTART; a third batch arrives only after the stop
+      writeBatch("b2", 20 until 30)
+      val q2 = startQ()
+      try q2.processAllAvailable() finally q2.stop()
+      assert(seen.values.sum == 30L, s"$seen")
+      // ANN query: fresh ids (nothing to self-exclude), one per cluster
+      val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)))
+        .toDF("vec_id", "embedding")
+      val got = StreamOps.ivfQueryIndex(idx, cents, queries, k = 3,
+        nprobe = 2, emptyInit, spark)
+      val corpus = (0 until 30).map(i => (i.toLong, vec(i.toLong)))
+        .toDF("vec_id", "embedding")
+      val want = graft.operators.Similarity
+        .ivfTopKTrained(cents, queries, corpus, k = 3, nprobe = 2)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getDouble(3))).toSeq
+      assert(rows(got) == rows(want),
+        s"streamed-index ANN diverged from the batch IVF:\n" +
+          s"${rows(got)}\nvs\n${rows(want)}")
+      // THE pruning pin: nprobe=2 of 4 populated cells — the query's
+      // scan reads a strict subset of the postings files, all of them
+      // in probed-cell buckets
+      val allFiles = StreamOps.readIndexState(s"$idx/postings",
+        graft.operators.Similarity.ivfPostings(cents, emptyInit),
+        spark).inputFiles.toSet
+      val gotFiles = got.inputFiles.toSet
+      assert(gotFiles.nonEmpty && gotFiles.subsetOf(allFiles) &&
+        gotFiles.size < allFiles.size,
+        s"query must prune postings files: ${gotFiles.size} of " +
+          s"${allFiles.size}")
+      // and a duplicate-ingest attempt trips the monotone-id contract
+      writeBatch("b3", 25 until 35)
+      val q3 = startQ()
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q3.processAllAvailable() finally q3.stop()
+      }
+      assert(err.getMessage.contains("ordering contract") ||
+        Option(err.getCause).exists(_.getMessage.contains("ordering contract")),
+        s"re-ingesting ids below the index max must fail loudly: $err")
     }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    def writeBatch(name: String, ids: Range): Unit =
-      ids.map(i => (i.toLong, vec(i.toLong)))
-        .toDF("vec_id", "embedding").coalesce(1)
-        .write.mode("overwrite").parquet(in.resolve(name).toString)
-    val emptyInit = Seq.empty[(Long, Array[Float])]
-      .toDF("vec_id", "embedding")
-    val seen = scala.collection.mutable.Map.empty[Long, Long]
-    def startQ() = StreamOps.ivfIngestStreamDurable(
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(in.toString),
-      idx, cents, emptyInit, ckpt, compactEvery = 2) {
-      (postings, id) => seen(id) = postings.count()
-    }
-    writeBatch("b0", 0 until 10)
-    writeBatch("b1", 10 until 20)
-    val q1 = startQ()
-    try q1.processAllAvailable() finally q1.stop()
-    // HARD RESTART; a third batch arrives only after the stop
-    writeBatch("b2", 20 until 30)
-    val q2 = startQ()
-    try q2.processAllAvailable() finally q2.stop()
-    assert(seen.values.sum == 30L, s"$seen")
-    // ANN query: fresh ids (nothing to self-exclude), one per cluster
-    val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)))
-      .toDF("vec_id", "embedding")
-    val got = StreamOps.ivfQueryIndex(idx, cents, queries, k = 3,
-      nprobe = 2, emptyInit, spark)
-    val corpus = (0 until 30).map(i => (i.toLong, vec(i.toLong)))
-      .toDF("vec_id", "embedding")
-    val want = graft.operators.Similarity
-      .ivfTopKTrained(cents, queries, corpus, k = 3, nprobe = 2)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
-    assert(rows(got) == rows(want),
-      s"streamed-index ANN diverged from the batch IVF:\n" +
-        s"${rows(got)}\nvs\n${rows(want)}")
-    // THE pruning pin: nprobe=2 of 4 populated cells — the query's
-    // scan reads a strict subset of the postings files, all of them
-    // in probed-cell buckets
-    val allFiles = StreamOps.readIndexState(s"$idx/postings",
-      graft.operators.Similarity.ivfPostings(cents, emptyInit),
-      spark).inputFiles.toSet
-    val gotFiles = got.inputFiles.toSet
-    assert(gotFiles.nonEmpty && gotFiles.subsetOf(allFiles) &&
-      gotFiles.size < allFiles.size,
-      s"query must prune postings files: ${gotFiles.size} of " +
-        s"${allFiles.size}")
-    // and a duplicate-ingest attempt trips the monotone-id contract
-    writeBatch("b3", 25 until 35)
-    val q3 = startQ()
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try q3.processAllAvailable() finally q3.stop()
-    }
-    assert(err.getMessage.contains("ordering contract") ||
-      Option(err.getCause).exists(_.getMessage.contains("ordering contract")),
-      s"re-ingesting ids below the index max must fail loudly: $err")
   }
 
   test("VERSIONED URL dedup (r17 tombstones): a retracted URL's " +
@@ -1192,68 +1198,70 @@ class StreamOpsSpec extends SparkSpec {
       "through a base — respellings of live URLs keep dropping, and " +
       "the base fold DISCARDS resolved tombstones") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_urlvers")
-    val idxDir = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val src = MemoryStream[(String, Long, String, String)]
-    val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val query = StreamOps.incrementalUrlDedupStreamVersioned(
-      src.toDF().toDF("op", "doc_id", "url", "html"), idxDir,
-      Seq("https://old.example.org/seeded").toDF("canon_url"), ckpt,
-      compactEvery = 2) { (batch, id) =>
-      got(id) = batch.select("doc_id").as[Long].collect().toSet
+    withTempDir("graft_urlvers") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idxDir = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val src = MemoryStream[(String, Long, String, String)]
+      val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
+      val query = StreamOps.incrementalUrlDedupStreamVersioned(
+        src.toDF().toDF("op", "doc_id", "url", "html"), idxDir,
+        Seq("https://old.example.org/seeded").toDF("canon_url"), ckpt,
+        compactEvery = 2) { (batch, id) =>
+        got(id) = batch.select("doc_id").as[Long].collect().toSet
+      }
+      def drive(rows: (String, Long, String, String)*): Unit = {
+        src.addData(rows: _*)
+        query.processAllAvailable()
+      }
+      val P = "https://a.example.org/p"
+      val Q = "https://a.example.org/q"
+      try {
+        drive(("crawl", 10L, P, "<p>p</p>"), ("crawl", 11L, Q, "<p>q</p>"))
+        drive(("crawl", 20L, s"$P?utm_source=x", "<p>p again</p>"),
+          ("crawl", 21L, "https://old.example.org/seeded", "<p>s</p>"))
+        // same-batch retract + recrawl: the page is unseen to its own batch
+        drive(("retract", 0L, P, ""), ("crawl", 30L, P, "<p>p v2</p>"))
+        // p is live again (30): a respelling drops; filler keeps folds coming
+        drive(("crawl", 40L, s"HTTPS://A.EXAMPLE.ORG:443/p", "<p>x</p>"),
+          ("crawl", 41L, "https://f3.example.org/f", "<p>f</p>"))
+        drive(("retract", 0L, Q, ""))
+        drive(("crawl", 51L, "https://f5.example.org/f", "<p>f</p>"))
+        drive(("crawl", 61L, "https://f6.example.org/f", "<p>f</p>"))
+        // q's original upsert was folded into base_3; its tombstone (b4)
+        // must still kill it — and the recrawl is first sight
+        drive(("crawl", 70L, Q, "<p>q v2</p>"),
+          ("crawl", 71L, "https://f7.example.org/f", "<p>f</p>"))
+        // q live again from 70: the respelling drops
+        drive(("crawl", 80L, s"$Q#frag", "<p>y</p>"))
+      } finally query.stop()
+      assert(got(0L) == Set(10L, 11L), s"${got(0L)}")
+      assert(got(1L) == Set.empty[Long],
+        s"respelling + seeded URL must both drop: ${got(1L)}")
+      assert(got(2L) == Set(30L),
+        s"same-batch retract+recrawl is first sight: ${got(2L)}")
+      assert(got(3L) == Set(41L),
+        s"p is live again — its respelling drops: ${got(3L)}")
+      assert(got(4L) == Set.empty[Long])
+      assert(got(7L) == Set(70L, 71L),
+        s"the base-folded-then-retracted URL must be first sight: " +
+          s"${got(7L)}")
+      assert(got(8L) == Set.empty[Long],
+        s"q is live again — its respelling drops: ${got(8L)}")
+      // folds actually happened (compactEvery=2 → bases at 3 and 7;
+      // base_7's reap removed the seed base_-1 — one fold cycle behind)
+      val bases = StreamOpsSpecHelpers.committedDirs(idxDir, "base_")
+      assert(bases.keySet == Set(3L, 7L), s"${bases.keySet}")
+      // ...and the newest base discarded every resolved tombstone while
+      // keeping live history (tombstones leave the index at full folds)
+      val base7 = spark.read.parquet(bases(7L).getAbsolutePath)
+      assert(base7.where(org.apache.spark.sql.functions
+        .col(DeltaIndex.OpCol) === "d").count() == 0L,
+        "the base fold must discard resolved tombstones")
+      assert(base7.where(org.apache.spark.sql.functions
+        .col("canon_url") === P).count() == 1L,
+        "exactly one live version of a retracted-then-recrawled URL")
     }
-    def drive(rows: (String, Long, String, String)*): Unit = {
-      src.addData(rows: _*)
-      query.processAllAvailable()
-    }
-    val P = "https://a.example.org/p"
-    val Q = "https://a.example.org/q"
-    try {
-      drive(("crawl", 10L, P, "<p>p</p>"), ("crawl", 11L, Q, "<p>q</p>"))
-      drive(("crawl", 20L, s"$P?utm_source=x", "<p>p again</p>"),
-        ("crawl", 21L, "https://old.example.org/seeded", "<p>s</p>"))
-      // same-batch retract + recrawl: the page is unseen to its own batch
-      drive(("retract", 0L, P, ""), ("crawl", 30L, P, "<p>p v2</p>"))
-      // p is live again (30): a respelling drops; filler keeps folds coming
-      drive(("crawl", 40L, s"HTTPS://A.EXAMPLE.ORG:443/p", "<p>x</p>"),
-        ("crawl", 41L, "https://f3.example.org/f", "<p>f</p>"))
-      drive(("retract", 0L, Q, ""))
-      drive(("crawl", 51L, "https://f5.example.org/f", "<p>f</p>"))
-      drive(("crawl", 61L, "https://f6.example.org/f", "<p>f</p>"))
-      // q's original upsert was folded into base_3; its tombstone (b4)
-      // must still kill it — and the recrawl is first sight
-      drive(("crawl", 70L, Q, "<p>q v2</p>"),
-        ("crawl", 71L, "https://f7.example.org/f", "<p>f</p>"))
-      // q live again from 70: the respelling drops
-      drive(("crawl", 80L, s"$Q#frag", "<p>y</p>"))
-    } finally query.stop()
-    assert(got(0L) == Set(10L, 11L), s"${got(0L)}")
-    assert(got(1L) == Set.empty[Long],
-      s"respelling + seeded URL must both drop: ${got(1L)}")
-    assert(got(2L) == Set(30L),
-      s"same-batch retract+recrawl is first sight: ${got(2L)}")
-    assert(got(3L) == Set(41L),
-      s"p is live again — its respelling drops: ${got(3L)}")
-    assert(got(4L) == Set.empty[Long])
-    assert(got(7L) == Set(70L, 71L),
-      s"the base-folded-then-retracted URL must be first sight: " +
-        s"${got(7L)}")
-    assert(got(8L) == Set.empty[Long],
-      s"q is live again — its respelling drops: ${got(8L)}")
-    // folds actually happened (compactEvery=2 → bases at 3 and 7;
-    // base_7's reap removed the seed base_-1 — one fold cycle behind)
-    val bases = StreamOpsSpecHelpers.committedDirs(idxDir, "base_")
-    assert(bases.keySet == Set(3L, 7L), s"${bases.keySet}")
-    // ...and the newest base discarded every resolved tombstone while
-    // keeping live history (tombstones leave the index at full folds)
-    val base7 = spark.read.parquet(bases(7L).getAbsolutePath)
-    assert(base7.where(org.apache.spark.sql.functions
-      .col(DeltaIndex.OpCol) === "d").count() == 0L,
-      "the base fold must discard resolved tombstones")
-    assert(base7.where(org.apache.spark.sql.functions
-      .col("canon_url") === P).count() == 1L,
-      "exactly one live version of a retracted-then-recrawled URL")
   }
 
   test("VERSIONED IVF (r17 tombstones): a tombstoned vector never " +
@@ -1262,72 +1270,74 @@ class StreamOpsSpec extends SparkSpec {
       "same-batch included), and every query equals the batch IVF " +
       "over the live corpus") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_ivfvers")
-    val idx = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val dim = 8
-    val cents: Seq[Seq[Double]] = (0 until 4).map(c =>
-      (0 until dim).map(d => if (d == c) 1.0 else 0.0))
-    def vecIn(cluster: Int, wobble: Int): Array[Float] = {
-      val arr = Array.fill(dim)(0.0f)
-      arr(cluster) = 1.0f
-      arr(cluster + 4) = 0.01f * wobble
-      arr
-    }
-    def vec(id: Long): Array[Float] = vecIn((id % 4).toInt, (id % 7).toInt)
-    val emptyInit = Seq.empty[(Long, Array[Float])]
-      .toDF("vec_id", "embedding")
-    val src = MemoryStream[(String, Long, Array[Float])]
-    val query = StreamOps.ivfIngestStreamVersioned(
-      src.toDF().toDF("op", "vec_id", "embedding"), idx, cents,
-      emptyInit, ckpt, compactEvery = 2) { (_, _) => () }
-    def drive(rows: (String, Long, Array[Float])*): Unit = {
-      src.addData(rows: _*)
-      query.processAllAvailable()
-    }
-    val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)),
-      (1002L, vec(1002L)), (1003L, vec(1003L)))
-      .toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
-    def assertLive(live: Map[Long, Array[Float]], hint: String): Unit = {
-      val corpus = live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")
-      assert(rows(StreamOps.ivfQueryIndexVersioned(idx, cents,
-          queries, k = 3, nprobe = 2, emptyInit, spark)) ==
-        rows(graft.operators.Similarity.ivfTopKTrained(cents, queries,
-          corpus, k = 3, nprobe = 2)), hint)
-    }
-    val live = scala.collection.mutable.Map.empty[Long, Array[Float]]
-    try {
-      drive((0L until 10L).map(i =>
-        ("u", i, { live(i) = vec(i); vec(i) })): _*)
-      // takedown of vec 3 (tombstone carries the indexed embedding)
-      drive(("d", 3L, vec(3L)))
-      live.remove(3L)
-      assertLive(live.toMap, "a tombstoned vector must never rank")
-      // re-ingest vec 3 in a DIFFERENT cluster (old version already
-      // tombstoned — the update contract)
-      drive(("u", 3L, vecIn(1, 5)))
-      live(3L) = vecIn(1, 5)
-      assertLive(live.toMap,
-        "a re-ingested vec_id must rank with its newest embedding")
-      // same-batch update of vec 5: delete old + upsert new
-      drive(("d", 5L, vec(5L)), ("u", 5L, vecIn(2, 6)))
-      live(5L) = vecIn(2, 6)
-      assertLive(live.toMap, "same-batch delete+upsert = update")
-      // push the chain through base folds (compactEvery=2) and
-      // re-assert — resolution must survive fold + reap cycles
-      for (b <- 0 until 5) {
-        val ids = (100L + b * 10L) until (100L + b * 10L + 3L)
-        drive(ids.map(i => ("u", i, { live(i) = vec(i); vec(i) })): _*)
+    withTempDir("graft_ivfvers") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idx = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val dim = 8
+      val cents: Seq[Seq[Double]] = (0 until 4).map(c =>
+        (0 until dim).map(d => if (d == c) 1.0 else 0.0))
+      def vecIn(cluster: Int, wobble: Int): Array[Float] = {
+        val arr = Array.fill(dim)(0.0f)
+        arr(cluster) = 1.0f
+        arr(cluster + 4) = 0.01f * wobble
+        arr
       }
-      assertLive(live.toMap,
-        "tombstone semantics must survive base folds and reaps")
-      assert(StreamOpsSpecHelpers
-        .committedDirs(s"$idx/postings", "base_").keySet.size >= 2,
-        "the drive must actually have crossed a base fold")
-    } finally query.stop()
+      def vec(id: Long): Array[Float] = vecIn((id % 4).toInt, (id % 7).toInt)
+      val emptyInit = Seq.empty[(Long, Array[Float])]
+        .toDF("vec_id", "embedding")
+      val src = MemoryStream[(String, Long, Array[Float])]
+      val query = StreamOps.ivfIngestStreamVersioned(
+        src.toDF().toDF("op", "vec_id", "embedding"), idx, cents,
+        emptyInit, ckpt, compactEvery = 2) { (_, _) => () }
+      def drive(rows: (String, Long, Array[Float])*): Unit = {
+        src.addData(rows: _*)
+        query.processAllAvailable()
+      }
+      val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)),
+        (1002L, vec(1002L)), (1003L, vec(1003L)))
+        .toDF("vec_id", "embedding")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getDouble(3))).toSeq
+      def assertLive(live: Map[Long, Array[Float]], hint: String): Unit = {
+        val corpus = live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")
+        assert(rows(StreamOps.ivfQueryIndexVersioned(idx, cents,
+            queries, k = 3, nprobe = 2, emptyInit, spark)) ==
+          rows(graft.operators.Similarity.ivfTopKTrained(cents, queries,
+            corpus, k = 3, nprobe = 2)), hint)
+      }
+      val live = scala.collection.mutable.Map.empty[Long, Array[Float]]
+      try {
+        drive((0L until 10L).map(i =>
+          ("u", i, { live(i) = vec(i); vec(i) })): _*)
+        // takedown of vec 3 (tombstone carries the indexed embedding)
+        drive(("d", 3L, vec(3L)))
+        live.remove(3L)
+        assertLive(live.toMap, "a tombstoned vector must never rank")
+        // re-ingest vec 3 in a DIFFERENT cluster (old version already
+        // tombstoned — the update contract)
+        drive(("u", 3L, vecIn(1, 5)))
+        live(3L) = vecIn(1, 5)
+        assertLive(live.toMap,
+          "a re-ingested vec_id must rank with its newest embedding")
+        // same-batch update of vec 5: delete old + upsert new
+        drive(("d", 5L, vec(5L)), ("u", 5L, vecIn(2, 6)))
+        live(5L) = vecIn(2, 6)
+        assertLive(live.toMap, "same-batch delete+upsert = update")
+        // push the chain through base folds (compactEvery=2) and
+        // re-assert — resolution must survive fold + reap cycles
+        for (b <- 0 until 5) {
+          val ids = (100L + b * 10L) until (100L + b * 10L + 3L)
+          drive(ids.map(i => ("u", i, { live(i) = vec(i); vec(i) })): _*)
+        }
+        assertLive(live.toMap,
+          "tombstone semantics must survive base folds and reaps")
+        assert(StreamOpsSpecHelpers
+          .committedDirs(s"$idx/postings", "base_").keySet.size >= 2,
+          "the drive must actually have crossed a base fold")
+      } finally query.stop()
+    }
   }
 
   test("ivfMigrateIndex (r17): ingest under epoch-1 centroids, " +
@@ -1337,103 +1347,105 @@ class StreamOpsSpec extends SparkSpec {
       "the new epoch carries the monotone-id contract, and a second " +
       "migration into the same target fails loudly") {
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_mig")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    val in2 = java.nio.file.Files.createDirectory(root.resolve("in2"))
-    val idx1 = root.resolve("idx1").toString
-    val idx2 = root.resolve("idx2").toString
-    val dim = 8
-    val cents1: Seq[Seq[Double]] = (0 until 4).map(c =>
-      (0 until dim).map(d => if (d == c) 1.0 else 0.0))
-    // epoch 2: the SAME directions in reversed order — every vector's
-    // cell id changes, so a migration that failed to re-assign would
-    // join queries against the wrong cells and diverge from batch IVF
-    val cents2 = cents1.reverse
-    def vec(id: Long): Array[Float] = {
-      val c = (id % 4).toInt
-      val arr = Array.fill(dim)(0.0f)
-      arr(c) = 1.0f
-      arr(c + 4) = 0.01f * (id % 7)
-      arr
-    }
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    def writeBatch(dir: java.nio.file.Path, name: String,
-        ids: Range): Unit =
-      ids.map(i => (i.toLong, vec(i.toLong)))
-        .toDF("vec_id", "embedding").coalesce(1)
-        .write.mode("overwrite").parquet(dir.resolve(name).toString)
-    val emptyInit = Seq.empty[(Long, Array[Float])]
-      .toDF("vec_id", "embedding")
-    def startIngest(dir: java.nio.file.Path, idx: String,
-        cents: Seq[Seq[Double]], ckpt: String) =
-      StreamOps.ivfIngestStreamDurable(
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("recursiveFileLookup", "true")
-          .parquet(dir.toString),
-        idx, cents, emptyInit, ckpt, compactEvery = 2) { (_, _) => () }
-    writeBatch(in, "b0", 0 until 10)
-    writeBatch(in, "b1", 10 until 20)
-    val q1 = startIngest(in, idx1, cents1, root.resolve("c1").toString)
-    try q1.processAllAvailable() finally q1.stop()
-    // MIGRATE: epoch-1 postings re-assigned under epoch-2 centroids
-    StreamOps.ivfMigrateIndex(idx1, cents2, idx2, spark)
-    val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)))
-      .toDF("vec_id", "embedding")
-    val corpus20 = (0 until 20).map(i => (i.toLong, vec(i.toLong)))
-      .toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
-    assert(rows(StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
-        nprobe = 2, emptyInit, spark)) ==
-      rows(graft.operators.Similarity.ivfTopKTrained(cents2, queries,
-        corpus20, k = 3, nprobe = 2)),
-      "the migrated index must equal the batch IVF under epoch-2 " +
-        "centroids")
-    // the old chain is untouched and queryable under ITS centroids
-    assert(rows(StreamOps.ivfQueryIndex(idx1, cents1, queries, k = 3,
-        nprobe = 2, emptyInit, spark)) ==
-      rows(graft.operators.Similarity.ivfTopKTrained(cents1, queries,
-        corpus20, k = 3, nprobe = 2)),
-      "the old epoch must stay queryable until cutover")
-    // continued ingestion under the NEW epoch: fresh ids pass and
-    // become queryable...
-    writeBatch(in2, "b2", 20 until 30)
-    val q2 = startIngest(in2, idx2, cents2,
-      root.resolve("c2").toString)
-    try q2.processAllAvailable() finally q2.stop()
-    val corpus30 = (0 until 30).map(i => (i.toLong, vec(i.toLong)))
-      .toDF("vec_id", "embedding")
-    assert(rows(StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
-        nprobe = 2, emptyInit, spark)) ==
-      rows(graft.operators.Similarity.ivfTopKTrained(cents2, queries,
-        corpus30, k = 3, nprobe = 2)))
-    // ...and a re-ingest BELOW the carried-over max id trips the
-    // monotone contract the migration seeded
-    writeBatch(in2, "b3", 25 until 35)
-    val q3 = startIngest(in2, idx2, cents2,
-      root.resolve("c2").toString)
-    val err = intercept[
-        org.apache.spark.sql.streaming.StreamingQueryException] {
-      try q3.processAllAvailable() finally q3.stop()
-    }
-    assert(err.getMessage.contains("ordering contract") ||
-      Option(err.getCause).exists(
-        _.getMessage.contains("ordering contract")), s"$err")
-    // a migration never overwrites an existing index
-    val err2 = intercept[IllegalArgumentException] {
+    withTempDir("graft_ivf_mig") { d =>
+      val root = java.nio.file.Path.of(d)
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val in2 = java.nio.file.Files.createDirectory(root.resolve("in2"))
+      val idx1 = root.resolve("idx1").toString
+      val idx2 = root.resolve("idx2").toString
+      val dim = 8
+      val cents1: Seq[Seq[Double]] = (0 until 4).map(c =>
+        (0 until dim).map(d => if (d == c) 1.0 else 0.0))
+      // epoch 2: the SAME directions in reversed order — every vector's
+      // cell id changes, so a migration that failed to re-assign would
+      // join queries against the wrong cells and diverge from batch IVF
+      val cents2 = cents1.reverse
+      def vec(id: Long): Array[Float] = {
+        val c = (id % 4).toInt
+        val arr = Array.fill(dim)(0.0f)
+        arr(c) = 1.0f
+        arr(c + 4) = 0.01f * (id % 7)
+        arr
+      }
+      val schema = StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType))))
+      def writeBatch(dir: java.nio.file.Path, name: String,
+          ids: Range): Unit =
+        ids.map(i => (i.toLong, vec(i.toLong)))
+          .toDF("vec_id", "embedding").coalesce(1)
+          .write.mode("overwrite").parquet(dir.resolve(name).toString)
+      val emptyInit = Seq.empty[(Long, Array[Float])]
+        .toDF("vec_id", "embedding")
+      def startIngest(dir: java.nio.file.Path, idx: String,
+          cents: Seq[Seq[Double]], ckpt: String) =
+        StreamOps.ivfIngestStreamDurable(
+          spark.readStream.schema(schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("recursiveFileLookup", "true")
+            .parquet(dir.toString),
+          idx, cents, emptyInit, ckpt, compactEvery = 2) { (_, _) => () }
+      writeBatch(in, "b0", 0 until 10)
+      writeBatch(in, "b1", 10 until 20)
+      val q1 = startIngest(in, idx1, cents1, root.resolve("c1").toString)
+      try q1.processAllAvailable() finally q1.stop()
+      // MIGRATE: epoch-1 postings re-assigned under epoch-2 centroids
       StreamOps.ivfMigrateIndex(idx1, cents2, idx2, spark)
+      val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)))
+        .toDF("vec_id", "embedding")
+      val corpus20 = (0 until 20).map(i => (i.toLong, vec(i.toLong)))
+        .toDF("vec_id", "embedding")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getDouble(3))).toSeq
+      assert(rows(StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
+          nprobe = 2, emptyInit, spark)) ==
+        rows(graft.operators.Similarity.ivfTopKTrained(cents2, queries,
+          corpus20, k = 3, nprobe = 2)),
+        "the migrated index must equal the batch IVF under epoch-2 " +
+          "centroids")
+      // the old chain is untouched and queryable under ITS centroids
+      assert(rows(StreamOps.ivfQueryIndex(idx1, cents1, queries, k = 3,
+          nprobe = 2, emptyInit, spark)) ==
+        rows(graft.operators.Similarity.ivfTopKTrained(cents1, queries,
+          corpus20, k = 3, nprobe = 2)),
+        "the old epoch must stay queryable until cutover")
+      // continued ingestion under the NEW epoch: fresh ids pass and
+      // become queryable...
+      writeBatch(in2, "b2", 20 until 30)
+      val q2 = startIngest(in2, idx2, cents2,
+        root.resolve("c2").toString)
+      try q2.processAllAvailable() finally q2.stop()
+      val corpus30 = (0 until 30).map(i => (i.toLong, vec(i.toLong)))
+        .toDF("vec_id", "embedding")
+      assert(rows(StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
+          nprobe = 2, emptyInit, spark)) ==
+        rows(graft.operators.Similarity.ivfTopKTrained(cents2, queries,
+          corpus30, k = 3, nprobe = 2)))
+      // ...and a re-ingest BELOW the carried-over max id trips the
+      // monotone contract the migration seeded
+      writeBatch(in2, "b3", 25 until 35)
+      val q3 = startIngest(in2, idx2, cents2,
+        root.resolve("c2").toString)
+      val err = intercept[
+          org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q3.processAllAvailable() finally q3.stop()
+      }
+      assert(err.getMessage.contains("ordering contract") ||
+        Option(err.getCause).exists(
+          _.getMessage.contains("ordering contract")), s"$err")
+      // a migration never overwrites an existing index
+      val err2 = intercept[IllegalArgumentException] {
+        StreamOps.ivfMigrateIndex(idx1, cents2, idx2, spark)
+      }
+      assert(err2.getMessage.contains("never overwrites"))
+      // and a query against a missing/never-ingested index dir fails
+      // loudly instead of returning silently-empty results (r17)
+      val err3 = intercept[IllegalArgumentException] {
+        StreamOps.ivfQueryIndex(root.resolve("nope").toString, cents2,
+          queries, k = 3, nprobe = 2, emptyInit, spark)
+      }
+      assert(err3.getMessage.contains("no committed postings chain"))
     }
-    assert(err2.getMessage.contains("never overwrites"))
-    // and a query against a missing/never-ingested index dir fails
-    // loudly instead of returning silently-empty results (r17)
-    val err3 = intercept[IllegalArgumentException] {
-      StreamOps.ivfQueryIndex(root.resolve("nope").toString, cents2,
-        queries, k = 3, nprobe = 2, emptyInit, spark)
-    }
-    assert(err3.getMessage.contains("no committed postings chain"))
   }
 
   test("incrementalUrlDedupStreamDurable: respellings of URLs seen in " +
@@ -1441,49 +1453,50 @@ class StreamOpsSpec extends SparkSpec {
       "within-batch spellings collapse to one keeper, fresh pages " +
       "pass") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_urlseen")
-    val idxDir = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val src = MemoryStream[(Long, String, String)]
-    val got = scala.collection.mutable.Map
-      .empty[Long, Set[(Long, String, String)]]
-    val query = StreamOps.incrementalUrlDedupStreamDurable(
-      src.toDF().toDF("doc_id", "url", "html"),
-      idxDir,
-      Seq("https://old.example.org/seeded").toDF("canon_url"), ckpt) {
-      (batch, id) =>
-        got(id) = batch.select("doc_id", "url", "canon_url")
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    withTempDir("graft_urlseen") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idxDir = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val src = MemoryStream[(Long, String, String)]
+      val got = scala.collection.mutable.Map
+        .empty[Long, Set[(Long, String, String)]]
+      val query = StreamOps.incrementalUrlDedupStreamDurable(
+        src.toDF().toDF("doc_id", "url", "html"),
+        idxDir,
+        Seq("https://old.example.org/seeded").toDF("canon_url"), ckpt) {
+        (batch, id) =>
+          got(id) = batch.select("doc_id", "url", "canon_url")
+            .collect()
+            .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      }
+      try {
+        src.addData(
+          (10L, "https://a.example.org/p", "<p>page p</p>"),
+          (11L, "https://a.example.org/p?utm_source=x", "<p>page p</p>"),
+          (12L, "https://old.example.org/seeded#frag", "<p>seeded</p>"))
+        query.processAllAvailable()
+        src.addData(
+          (20L, "HTTPS://A.Example.ORG:443/p", "<p>page p again</p>"),
+          (21L, "https://a.example.org/q", "<p>fresh page q</p>"))
+        query.processAllAvailable()
+        assert(got(0L) == Set((10L, "https://a.example.org/p",
+          "https://a.example.org/p")),
+          s"batch 0: keeper 10 only (11 respells it, 12 is pre-seeded): " +
+            s"${got(0L)}")
+        assert(got(1L) == Set((21L, "https://a.example.org/q",
+          "https://a.example.org/q")),
+          s"batch 1: 20 respells a batch-0 page, only 21 is fresh: " +
+            s"${got(1L)}")
+        // the persisted seen-set is the union of seed + both batches —
+        // read through the consumer-facing accumulated-state API (the
+        // delta layout: seed rides the fallback, batches ride deltas)
+        val seen = StreamOps.readIndexState(idxDir,
+            Seq("https://old.example.org/seeded").toDF("canon_url"), spark)
+          .as[String].collect().toSet
+        assert(seen == Set("https://old.example.org/seeded",
+          "https://a.example.org/p", "https://a.example.org/q"))
+      } finally query.stop()
     }
-    try {
-      src.addData(
-        (10L, "https://a.example.org/p", "<p>page p</p>"),
-        (11L, "https://a.example.org/p?utm_source=x", "<p>page p</p>"),
-        (12L, "https://old.example.org/seeded#frag", "<p>seeded</p>"))
-      query.processAllAvailable()
-      src.addData(
-        (20L, "HTTPS://A.Example.ORG:443/p", "<p>page p again</p>"),
-        (21L, "https://a.example.org/q", "<p>fresh page q</p>"))
-      query.processAllAvailable()
-      assert(got(0L) == Set((10L, "https://a.example.org/p",
-        "https://a.example.org/p")),
-        s"batch 0: keeper 10 only (11 respells it, 12 is pre-seeded): " +
-          s"${got(0L)}")
-      assert(got(1L) == Set((21L, "https://a.example.org/q",
-        "https://a.example.org/q")),
-        s"batch 1: 20 respells a batch-0 page, only 21 is fresh: " +
-          s"${got(1L)}")
-      // the persisted seen-set is the union of seed + both batches —
-      // read through the consumer-facing accumulated-state API (the
-      // delta layout: seed rides the fallback, batches ride deltas)
-      val seen = StreamOps.readIndexState(idxDir,
-          Seq("https://old.example.org/seeded").toDF("canon_url"), spark)
-        .as[String].collect().toSet
-      assert(seen == Set("https://old.example.org/seeded",
-        "https://a.example.org/p", "https://a.example.org/q"))
-    } finally query.stop()
   }
 
   test("ivfMigrateIndex on a VERSIONED chain (r18): live rows " +
@@ -1494,106 +1507,108 @@ class StreamOpsSpec extends SparkSpec {
       "upsert trips the seq-uniqueness check, and version-mismatched " +
       "consumers fail loudly at the door") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_migv")
-    val idx1 = root.resolve("idx1").toString
-    val idx2 = root.resolve("idx2").toString
-    val dim = 8
-    val cents1: Seq[Seq[Double]] = (0 until 4).map(c =>
-      (0 until dim).map(d => if (d == c) 1.0 else 0.0))
-    val cents2 = cents1.reverse
-    def vecIn(cluster: Int, wobble: Int): Array[Float] = {
-      val arr = Array.fill(dim)(0.0f)
-      arr(cluster) = 1.0f
-      arr(cluster + 4) = 0.01f * wobble
-      arr
-    }
-    def vec(id: Long): Array[Float] =
-      vecIn((id % 4).toInt, (id % 7).toInt)
-    val emptyInit = Seq.empty[(Long, Array[Float])]
-      .toDF("vec_id", "embedding")
-    val live = scala.collection.mutable.Map.empty[Long, Array[Float]]
-    val src = MemoryStream[(String, Long, Array[Float])]
-    val q1 = StreamOps.ivfIngestStreamVersioned(
-      src.toDF().toDF("op", "vec_id", "embedding"), idx1, cents1,
-      emptyInit, root.resolve("c1").toString) { (_, _) => () }
-    try {
-      src.addData((0L until 10L).map(i =>
-        ("u", i, { live(i) = vec(i); vec(i) })): _*)
-      q1.processAllAvailable()
-      src.addData(("d", 3L, vec(3L))) // takedown
-      q1.processAllAvailable()
-      live.remove(3L)
-      src.addData(("d", 5L, vec(5L)), ("u", 5L, vecIn(2, 6))) // update
-      q1.processAllAvailable()
-      live(5L) = vecIn(2, 6)
-    } finally q1.stop()
-    StreamOps.ivfMigrateIndex(idx1, cents2, idx2, spark)
-    val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)),
-      (1002L, vec(1002L)), (1003L, vec(1003L)))
-      .toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getDouble(3))).toSeq
-    def assertLive(hint: String): Unit = {
-      val corpus = live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")
-      val got = rows(StreamOps.ivfQueryIndexVersioned(idx2, cents2,
-        queries, k = 3, nprobe = 2, emptyInit, spark))
-      assert(got == rows(graft.operators.Similarity.ivfTopKTrained(
-        cents2, queries, corpus, k = 3, nprobe = 2)), hint)
-      assert(!got.exists(_._2 == 3L),
-        s"the tombstoned vector must never rank after migration: $got")
-    }
-    assertLive("the migrated epoch must equal the batch IVF over " +
-      "the LIVE corpus only")
-    // continued VERSIONED ingest into the migrated chain: a takedown
-    // of a MIGRATED vector and fresh rows both work
-    val src2 = MemoryStream[(String, Long, Array[Float])]
-    val q2 = StreamOps.ivfIngestStreamVersioned(
-      src2.toDF().toDF("op", "vec_id", "embedding"), idx2, cents2,
-      emptyInit, root.resolve("c2").toString) { (_, _) => () }
-    try {
-      src2.addData(("u", 100L, { live(100L) = vec(100L); vec(100L) }),
-        ("d", 7L, vec(7L)))
-      q2.processAllAvailable()
-      live.remove(7L)
-      assertLive("retraction must keep working in the migrated epoch")
-      // seq-uniqueness (r18): duplicate same-batch upserts of one
-      // vec_id would share a __seq stamp — loud failure, not
-      // nondeterministic resolution
-      src2.addData(("u", 200L, vec(200L)), ("u", 200L, vecIn(1, 2)))
-      val err = intercept[
-          org.apache.spark.sql.streaming.StreamingQueryException] {
-        q2.processAllAvailable()
+    withTempDir("graft_migv") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idx1 = root.resolve("idx1").toString
+      val idx2 = root.resolve("idx2").toString
+      val dim = 8
+      val cents1: Seq[Seq[Double]] = (0 until 4).map(c =>
+        (0 until dim).map(d => if (d == c) 1.0 else 0.0))
+      val cents2 = cents1.reverse
+      def vecIn(cluster: Int, wobble: Int): Array[Float] = {
+        val arr = Array.fill(dim)(0.0f)
+        arr(cluster) = 1.0f
+        arr(cluster + 4) = 0.01f * wobble
+        arr
       }
-      assert(err.getMessage.contains("duplicate upserts") ||
-        Option(err.getCause).exists(
-          _.getMessage.contains("duplicate upserts")), s"$err")
-    } finally q2.stop()
-    // version-mismatch guards: unversioned consumers refuse the
-    // versioned chain at the door...
-    val errQ = intercept[IllegalArgumentException] {
-      StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
-        nprobe = 2, emptyInit, spark)
+      def vec(id: Long): Array[Float] =
+        vecIn((id % 4).toInt, (id % 7).toInt)
+      val emptyInit = Seq.empty[(Long, Array[Float])]
+        .toDF("vec_id", "embedding")
+      val live = scala.collection.mutable.Map.empty[Long, Array[Float]]
+      val src = MemoryStream[(String, Long, Array[Float])]
+      val q1 = StreamOps.ivfIngestStreamVersioned(
+        src.toDF().toDF("op", "vec_id", "embedding"), idx1, cents1,
+        emptyInit, root.resolve("c1").toString) { (_, _) => () }
+      try {
+        src.addData((0L until 10L).map(i =>
+          ("u", i, { live(i) = vec(i); vec(i) })): _*)
+        q1.processAllAvailable()
+        src.addData(("d", 3L, vec(3L))) // takedown
+        q1.processAllAvailable()
+        live.remove(3L)
+        src.addData(("d", 5L, vec(5L)), ("u", 5L, vecIn(2, 6))) // update
+        q1.processAllAvailable()
+        live(5L) = vecIn(2, 6)
+      } finally q1.stop()
+      StreamOps.ivfMigrateIndex(idx1, cents2, idx2, spark)
+      val queries = Seq((1000L, vec(1000L)), (1001L, vec(1001L)),
+        (1002L, vec(1002L)), (1003L, vec(1003L)))
+        .toDF("vec_id", "embedding")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
+          r.getDouble(3))).toSeq
+      def assertLive(hint: String): Unit = {
+        val corpus = live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")
+        val got = rows(StreamOps.ivfQueryIndexVersioned(idx2, cents2,
+          queries, k = 3, nprobe = 2, emptyInit, spark))
+        assert(got == rows(graft.operators.Similarity.ivfTopKTrained(
+          cents2, queries, corpus, k = 3, nprobe = 2)), hint)
+        assert(!got.exists(_._2 == 3L),
+          s"the tombstoned vector must never rank after migration: $got")
+      }
+      assertLive("the migrated epoch must equal the batch IVF over " +
+        "the LIVE corpus only")
+      // continued VERSIONED ingest into the migrated chain: a takedown
+      // of a MIGRATED vector and fresh rows both work
+      val src2 = MemoryStream[(String, Long, Array[Float])]
+      val q2 = StreamOps.ivfIngestStreamVersioned(
+        src2.toDF().toDF("op", "vec_id", "embedding"), idx2, cents2,
+        emptyInit, root.resolve("c2").toString) { (_, _) => () }
+      try {
+        src2.addData(("u", 100L, { live(100L) = vec(100L); vec(100L) }),
+          ("d", 7L, vec(7L)))
+        q2.processAllAvailable()
+        live.remove(7L)
+        assertLive("retraction must keep working in the migrated epoch")
+        // seq-uniqueness (r18): duplicate same-batch upserts of one
+        // vec_id would share a __seq stamp — loud failure, not
+        // nondeterministic resolution
+        src2.addData(("u", 200L, vec(200L)), ("u", 200L, vecIn(1, 2)))
+        val err = intercept[
+            org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+        assert(err.getMessage.contains("duplicate upserts") ||
+          Option(err.getCause).exists(
+            _.getMessage.contains("duplicate upserts")), s"$err")
+      } finally q2.stop()
+      // version-mismatch guards: unversioned consumers refuse the
+      // versioned chain at the door...
+      val errQ = intercept[IllegalArgumentException] {
+        StreamOps.ivfQueryIndex(idx2, cents2, queries, k = 3,
+          nprobe = 2, emptyInit, spark)
+      }
+      assert(errQ.getMessage.contains("VERSIONED"), s"$errQ")
+      val src3 = MemoryStream[(Long, Array[Float])]
+      val errI = intercept[IllegalArgumentException] {
+        StreamOps.ivfIngestStreamDurable(
+          src3.toDF().toDF("vec_id", "embedding"), idx2, cents2,
+          emptyInit, root.resolve("c3").toString) { (_, _) => () }
+      }
+      assert(errI.getMessage.contains("VERSIONED"), s"$errI")
+      // ...and the versioned query refuses an UNVERSIONED chain
+      val idx3 = root.resolve("idx3").toString
+      DeltaIndex.seed(graft.operators.Similarity.ivfPostings(cents2,
+          live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")),
+        s"$idx3/postings",
+        Some(Bucketing(DeltaIndex.NumBuckets, Seq("cell"))))
+      val errV = intercept[IllegalArgumentException] {
+        StreamOps.ivfQueryIndexVersioned(idx3, cents2, queries, k = 3,
+          nprobe = 2, emptyInit, spark)
+      }
+      assert(errV.getMessage.contains("UNVERSIONED"), s"$errV")
     }
-    assert(errQ.getMessage.contains("VERSIONED"), s"$errQ")
-    val src3 = MemoryStream[(Long, Array[Float])]
-    val errI = intercept[IllegalArgumentException] {
-      StreamOps.ivfIngestStreamDurable(
-        src3.toDF().toDF("vec_id", "embedding"), idx2, cents2,
-        emptyInit, root.resolve("c3").toString) { (_, _) => () }
-    }
-    assert(errI.getMessage.contains("VERSIONED"), s"$errI")
-    // ...and the versioned query refuses an UNVERSIONED chain
-    val idx3 = root.resolve("idx3").toString
-    DeltaIndex.seed(graft.operators.Similarity.ivfPostings(cents2,
-        live.toSeq.sortBy(_._1).toDF("vec_id", "embedding")),
-      s"$idx3/postings",
-      Some(Bucketing(DeltaIndex.NumBuckets, Seq("cell"))))
-    val errV = intercept[IllegalArgumentException] {
-      StreamOps.ivfQueryIndexVersioned(idx3, cents2, queries, k = 3,
-        nprobe = 2, emptyInit, spark)
-    }
-    assert(errV.getMessage.contains("UNVERSIONED"), s"$errV")
   }
 
   test("VERSIONED image dedup (r18 tombstones): a retracted image " +
@@ -1603,71 +1618,73 @@ class StreamOpsSpec extends SparkSpec {
       "survive base folds, and the base parquet discards resolved " +
       "tombstones and dead docs") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_imgv")
-    val idx = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    // well-separated signature families (pairwise hamming >> 3)
-    val A = 0L
-    val B = 0x00FF00FF00FF00FFL
-    val C = 0x0F0F0F0F0F0F0F0FL
-    val emptyInit = Seq.empty[(Long, Long, Long)]
-      .toDF("doc_id", "lo", "hi")
-    val src = MemoryStream[(String, Long, Long, Long)]
-    val got = scala.collection.mutable
-      .Map.empty[Long, Set[(Long, Long, Int)]]
-    val query = StreamOps.incrementalImageDedupStreamVersioned(
-      src.toDF().toDF("op", "doc_id", "lo", "hi"), idx, emptyInit,
-      ckpt, compactEvery = 2) { (batch, id) =>
-      got(id) = batch.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    withTempDir("graft_imgv") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idx = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      // well-separated signature families (pairwise hamming >> 3)
+      val A = 0L
+      val B = 0x00FF00FF00FF00FFL
+      val C = 0x0F0F0F0F0F0F0F0FL
+      val emptyInit = Seq.empty[(Long, Long, Long)]
+        .toDF("doc_id", "lo", "hi")
+      val src = MemoryStream[(String, Long, Long, Long)]
+      val got = scala.collection.mutable
+        .Map.empty[Long, Set[(Long, Long, Int)]]
+      val query = StreamOps.incrementalImageDedupStreamVersioned(
+        src.toDF().toDF("op", "doc_id", "lo", "hi"), idx, emptyInit,
+        ckpt, compactEvery = 2) { (batch, id) =>
+        got(id) = batch.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      }
+      def drive(rows: (String, Long, Long, Long)*): Unit = {
+        src.addData(rows: _*)
+        query.processAllAvailable()
+      }
+      try {
+        drive(("u", 10L, A, 0L), ("u", 11L, B, 0L), ("u", 12L, C, 0L))
+        // near-copy of C drops while C lives (keeper = 12)
+        drive(("u", 20L, C ^ 1L, 0L))
+        // takedown of image 10 (tombstone carries the indexed sig)
+        drive(("d", 10L, A, 0L))
+        // near-copy of the RETRACTED image is first sight
+        drive(("u", 30L, A ^ 1L, 0L))
+        // same-batch retract(11) + near-copy of B under a fresh id:
+        // first sight within its own batch
+        drive(("d", 11L, B, 0L), ("u", 40L, B ^ 1L, 0L))
+        // filler pushes the chain through folds
+        drive(("u", 50L, 0x5555555555555555L, 0L))
+        // post-retraction probe across the fold: A'' matches the LIVE
+        // first-sighted 30, B''' matches the LIVE 40 — never the dead
+        // 10/11
+        drive(("u", 60L, A ^ 2L, 0L), ("u", 61L, B ^ 2L, 0L))
+      } finally query.stop()
+      assert(got(0L) == Set.empty[(Long, Long, Int)])
+      assert(got(1L) == Set((20L, 12L, 1)),
+        s"live sig must suppress its near-copy: ${got(1L)}")
+      assert(got(2L) == Set.empty[(Long, Long, Int)])
+      assert(got(3L) == Set.empty[(Long, Long, Int)],
+        s"a near-copy of the RETRACTED image must be first sight: " +
+          s"${got(3L)}")
+      assert(got(4L) == Set.empty[(Long, Long, Int)],
+        s"same-batch retract+reingest must be first sight: ${got(4L)}")
+      assert(got(5L) == Set.empty[(Long, Long, Int)])
+      assert(got(6L) == Set((60L, 30L, 2), (61L, 40L, 2)),
+        s"the LIVE witnesses (30, 40) must be the keepers — the " +
+          s"retracted 10/11 must not suppress: ${got(6L)}")
+      // base folds actually happened, and the newest sigs base is
+      // tombstone-free with the dead docs physically gone
+      val bases = StreamOpsSpecHelpers
+        .committedDirs(s"$idx/sigs", "base_")
+      val real = bases.keySet.filter(_ >= 0)
+      assert(real.nonEmpty, s"the drive must cross a base fold: " +
+        s"${bases.keySet}")
+      val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
+      assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L,
+        "the base fold must discard resolved tombstones")
+      assert(newest.where(col("doc_id") === 10L).count() == 0L,
+        "the retracted doc's sig rows must leave the index at the fold")
     }
-    def drive(rows: (String, Long, Long, Long)*): Unit = {
-      src.addData(rows: _*)
-      query.processAllAvailable()
-    }
-    try {
-      drive(("u", 10L, A, 0L), ("u", 11L, B, 0L), ("u", 12L, C, 0L))
-      // near-copy of C drops while C lives (keeper = 12)
-      drive(("u", 20L, C ^ 1L, 0L))
-      // takedown of image 10 (tombstone carries the indexed sig)
-      drive(("d", 10L, A, 0L))
-      // near-copy of the RETRACTED image is first sight
-      drive(("u", 30L, A ^ 1L, 0L))
-      // same-batch retract(11) + near-copy of B under a fresh id:
-      // first sight within its own batch
-      drive(("d", 11L, B, 0L), ("u", 40L, B ^ 1L, 0L))
-      // filler pushes the chain through folds
-      drive(("u", 50L, 0x5555555555555555L, 0L))
-      // post-retraction probe across the fold: A'' matches the LIVE
-      // first-sighted 30, B''' matches the LIVE 40 — never the dead
-      // 10/11
-      drive(("u", 60L, A ^ 2L, 0L), ("u", 61L, B ^ 2L, 0L))
-    } finally query.stop()
-    assert(got(0L) == Set.empty[(Long, Long, Int)])
-    assert(got(1L) == Set((20L, 12L, 1)),
-      s"live sig must suppress its near-copy: ${got(1L)}")
-    assert(got(2L) == Set.empty[(Long, Long, Int)])
-    assert(got(3L) == Set.empty[(Long, Long, Int)],
-      s"a near-copy of the RETRACTED image must be first sight: " +
-        s"${got(3L)}")
-    assert(got(4L) == Set.empty[(Long, Long, Int)],
-      s"same-batch retract+reingest must be first sight: ${got(4L)}")
-    assert(got(5L) == Set.empty[(Long, Long, Int)])
-    assert(got(6L) == Set((60L, 30L, 2), (61L, 40L, 2)),
-      s"the LIVE witnesses (30, 40) must be the keepers — the " +
-        s"retracted 10/11 must not suppress: ${got(6L)}")
-    // base folds actually happened, and the newest sigs base is
-    // tombstone-free with the dead docs physically gone
-    val bases = StreamOpsSpecHelpers
-      .committedDirs(s"$idx/sigs", "base_")
-    val real = bases.keySet.filter(_ >= 0)
-    assert(real.nonEmpty, s"the drive must cross a base fold: " +
-      s"${bases.keySet}")
-    val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
-    assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L,
-      "the base fold must discard resolved tombstones")
-    assert(newest.where(col("doc_id") === 10L).count() == 0L,
-      "the retracted doc's sig rows must leave the index at the fold")
   }
 
   test("VERSIONED near-dup dedup (r18 tombstones): a retracted " +
@@ -1677,72 +1694,74 @@ class StreamOpsSpec extends SparkSpec {
       "witness as keeper, and the base folds discard dead sig and " +
       "band rows") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_ndv")
-    val idx = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    def toks(p: String, n: Int): String =
-      (1 to n).map(i => s"$p$i").mkString(" ")
-    val textA = toks("aa", 60)
-    val textB = toks("bb", 60)
-    def near(t: String, tag: String): String =
-      t.split(" ").dropRight(1).mkString(" ") + s" $tag"
-    val emptySigs = graft.operators.Dedup.minhashSignatures(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"))
-    val src = MemoryStream[(String, Long, String)]
-    val got = scala.collection.mutable
-      .Map.empty[Long, Set[(Long, Long)]]
-    val query = StreamOps.incrementalNearDupStreamVersioned(
-      src.toDF().toDF("op", "doc_id", "text"), idx, emptySigs,
-      ckpt, compactEvery = 2) { (batch, id) =>
-      got(id) = batch.collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    withTempDir("graft_ndv") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idx = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      def toks(p: String, n: Int): String =
+        (1 to n).map(i => s"$p$i").mkString(" ")
+      val textA = toks("aa", 60)
+      val textB = toks("bb", 60)
+      def near(t: String, tag: String): String =
+        t.split(" ").dropRight(1).mkString(" ") + s" $tag"
+      val emptySigs = graft.operators.Dedup.minhashSignatures(
+        Seq.empty[(Long, String)].toDF("doc_id", "text"))
+      val src = MemoryStream[(String, Long, String)]
+      val got = scala.collection.mutable
+        .Map.empty[Long, Set[(Long, Long)]]
+      val query = StreamOps.incrementalNearDupStreamVersioned(
+        src.toDF().toDF("op", "doc_id", "text"), idx, emptySigs,
+        ckpt, compactEvery = 2) { (batch, id) =>
+        got(id) = batch.collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      }
+      def drive(rows: (String, Long, String)*): Unit = {
+        src.addData(rows: _*)
+        query.processAllAvailable()
+      }
+      try {
+        drive(("ingest", 10L, textA), ("ingest", 11L, textB))
+        // near-copy of B while B lives: suppressed, keeper 11
+        drive(("ingest", 20L, near(textB, "zz")))
+        // takedown of A (the retraction carries the indexed text)
+        drive(("retract", 10L, textA))
+        // near-copy of the RETRACTED text: first sight
+        drive(("ingest", 30L, near(textA, "yy")))
+        // same-batch retract of BOTH B-family contributors (11 and the
+        // accumulated 20) + a fresh near-copy: first sight in-batch
+        drive(("retract", 11L, textB),
+          ("retract", 20L, near(textB, "zz")),
+          ("ingest", 40L, near(textB, "ww")))
+        // filler pushes folds
+        drive(("ingest", 50L, toks("cc", 60)))
+        // post-retraction probe: A-near matches the LIVE 30, not 10
+        drive(("ingest", 60L, near(textA, "xx")))
+      } finally query.stop()
+      assert(got(0L) == Set.empty[(Long, Long)])
+      assert(got(1L) == Set((20L, 11L)),
+        s"live text must suppress its near-copy: ${got(1L)}")
+      assert(got(2L) == Set.empty[(Long, Long)])
+      assert(got(3L) == Set.empty[(Long, Long)],
+        s"a near-copy of the RETRACTED text must be first sight: " +
+          s"${got(3L)}")
+      assert(got(4L) == Set.empty[(Long, Long)],
+        s"same-batch retract-all+reingest must be first sight: " +
+          s"${got(4L)}")
+      assert(got(5L) == Set.empty[(Long, Long)])
+      assert(got(6L) == Set((60L, 30L)),
+        s"the LIVE witness (30) must be the keeper — not the " +
+          s"retracted 10: ${got(6L)}")
+      // base folds happened; the newest bands base is tombstone-free
+      // and the retracted doc's band rows are physically gone
+      val bases = StreamOpsSpecHelpers
+        .committedDirs(s"$idx/bands", "base_")
+      val real = bases.keySet.filter(_ >= 0)
+      assert(real.nonEmpty, s"${bases.keySet}")
+      val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
+      assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L)
+      assert(newest.where(col("doc_id") === 10L).count() == 0L,
+        "the retracted doc's band rows must leave the index at the fold")
     }
-    def drive(rows: (String, Long, String)*): Unit = {
-      src.addData(rows: _*)
-      query.processAllAvailable()
-    }
-    try {
-      drive(("ingest", 10L, textA), ("ingest", 11L, textB))
-      // near-copy of B while B lives: suppressed, keeper 11
-      drive(("ingest", 20L, near(textB, "zz")))
-      // takedown of A (the retraction carries the indexed text)
-      drive(("retract", 10L, textA))
-      // near-copy of the RETRACTED text: first sight
-      drive(("ingest", 30L, near(textA, "yy")))
-      // same-batch retract of BOTH B-family contributors (11 and the
-      // accumulated 20) + a fresh near-copy: first sight in-batch
-      drive(("retract", 11L, textB),
-        ("retract", 20L, near(textB, "zz")),
-        ("ingest", 40L, near(textB, "ww")))
-      // filler pushes folds
-      drive(("ingest", 50L, toks("cc", 60)))
-      // post-retraction probe: A-near matches the LIVE 30, not 10
-      drive(("ingest", 60L, near(textA, "xx")))
-    } finally query.stop()
-    assert(got(0L) == Set.empty[(Long, Long)])
-    assert(got(1L) == Set((20L, 11L)),
-      s"live text must suppress its near-copy: ${got(1L)}")
-    assert(got(2L) == Set.empty[(Long, Long)])
-    assert(got(3L) == Set.empty[(Long, Long)],
-      s"a near-copy of the RETRACTED text must be first sight: " +
-        s"${got(3L)}")
-    assert(got(4L) == Set.empty[(Long, Long)],
-      s"same-batch retract-all+reingest must be first sight: " +
-        s"${got(4L)}")
-    assert(got(5L) == Set.empty[(Long, Long)])
-    assert(got(6L) == Set((60L, 30L)),
-      s"the LIVE witness (30) must be the keeper — not the " +
-        s"retracted 10: ${got(6L)}")
-    // base folds happened; the newest bands base is tombstone-free
-    // and the retracted doc's band rows are physically gone
-    val bases = StreamOpsSpecHelpers
-      .committedDirs(s"$idx/bands", "base_")
-    val real = bases.keySet.filter(_ >= 0)
-    assert(real.nonEmpty, s"${bases.keySet}")
-    val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
-    assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L)
-    assert(newest.where(col("doc_id") === 10L).count() == 0L,
-      "the retracted doc's band rows must leave the index at the fold")
   }
 
   test("VERSIONED substr dedup (r18 tombstones, attribution rows): " +
@@ -1752,64 +1771,66 @@ class StreamOpsSpec extends SparkSpec {
       "next copy is first sight; the base fold discards dead " +
       "attribution rows; the seeded corpus cleans from batch 0") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_subv")
-    val idx = root.resolve("idx").toString
-    val ckpt = root.resolve("ckpt").toString
-    def toks(p: String, n: Int): String =
-      (1 to n).map(i => s"$p$i").mkString(" ")
-    val spanS = toks("s", 50)
-    val spanX = toks("x", 55)
-    val text10 = s"${toks("a", 10)} $spanS"
-    val text20 = s"$spanS ${toks("b", 10)}"
-    val text30 = s"$spanS ${toks("c", 5)}"
-    val seedDocs = Seq((5L, spanX)).toDF("doc_id", "text")
-    val src = MemoryStream[(String, Long, String)]
-    val got = scala.collection.mutable.Map.empty[(Long, Long), Long]
-    val query = StreamOps.incrementalSubstrStreamVersioned(
-      src.toDF().toDF("op", "doc_id", "text"), idx, seedDocs,
-      ckpt, compactEvery = 2) { (batch, id) =>
-      batch.collect().foreach(r =>
-        got((id, r.getLong(0))) = r.getLong(2)) // n_removed
+    withTempDir("graft_subv") { d =>
+      val root = java.nio.file.Path.of(d)
+      val idx = root.resolve("idx").toString
+      val ckpt = root.resolve("ckpt").toString
+      def toks(p: String, n: Int): String =
+        (1 to n).map(i => s"$p$i").mkString(" ")
+      val spanS = toks("s", 50)
+      val spanX = toks("x", 55)
+      val text10 = s"${toks("a", 10)} $spanS"
+      val text20 = s"$spanS ${toks("b", 10)}"
+      val text30 = s"$spanS ${toks("c", 5)}"
+      val seedDocs = Seq((5L, spanX)).toDF("doc_id", "text")
+      val src = MemoryStream[(String, Long, String)]
+      val got = scala.collection.mutable.Map.empty[(Long, Long), Long]
+      val query = StreamOps.incrementalSubstrStreamVersioned(
+        src.toDF().toDF("op", "doc_id", "text"), idx, seedDocs,
+        ckpt, compactEvery = 2) { (batch, id) =>
+        batch.collect().foreach(r =>
+          got((id, r.getLong(0))) = r.getLong(2)) // n_removed
+      }
+      def drive(rows: (String, Long, String)*): Unit = {
+        src.addData(rows: _*)
+        query.processAllAvailable()
+      }
+      try {
+        // the SEEDED corpus cleans from batch 0: doc 6 copies spanX
+        drive(("ingest", 6L, s"$spanX y1"),
+          ("ingest", 10L, text10))
+        drive(("ingest", 20L, text20))      // spanS cleaned (10 lives)
+        drive(("retract", 10L, text10))     // retract the ORIGIN only
+        // 20 still carries the span: a new copy is STILL cleaned (the
+        // per-contributor semantics — 30's raw digests also commit)
+        drive(("ingest", 30L, text30))
+        drive(("retract", 20L, text20))
+        // LAST contributor retracted in the same batch as the next
+        // copy: first sight
+        drive(("retract", 30L, text30),
+          ("ingest", 40L, s"$spanS ${toks("d", 5)}"))
+      } finally query.stop()
+      assert(got((0L, 6L)) == 55L,
+        s"the seeded corpus must clean batch 0: ${got((0L, 6L))}")
+      assert(got((0L, 10L)) == 0L)
+      assert(got((1L, 20L)) == 50L,
+        s"spanS must clean while its origin lives: ${got((1L, 20L))}")
+      assert(got((3L, 30L)) == 50L,
+        "retracting the origin alone must NOT un-suppress while " +
+          s"another contributor lives: ${got((3L, 30L))}")
+      assert(got((5L, 40L)) == 0L,
+        "once every contributor is retracted the next copy is first " +
+          s"sight: ${got((5L, 40L))}")
+      // the base fold discarded tombstones and doc 10's attribution
+      val bases = StreamOpsSpecHelpers.committedDirs(idx, "base_")
+      val real = bases.keySet.filter(_ >= 0)
+      assert(real.nonEmpty, s"${bases.keySet}")
+      val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
+      assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L)
+      assert(newest.where(col("doc_id") === 10L).count() == 0L,
+        "the retracted doc's attribution rows must leave the index " +
+          "at the fold")
     }
-    def drive(rows: (String, Long, String)*): Unit = {
-      src.addData(rows: _*)
-      query.processAllAvailable()
-    }
-    try {
-      // the SEEDED corpus cleans from batch 0: doc 6 copies spanX
-      drive(("ingest", 6L, s"$spanX y1"),
-        ("ingest", 10L, text10))
-      drive(("ingest", 20L, text20))      // spanS cleaned (10 lives)
-      drive(("retract", 10L, text10))     // retract the ORIGIN only
-      // 20 still carries the span: a new copy is STILL cleaned (the
-      // per-contributor semantics — 30's raw digests also commit)
-      drive(("ingest", 30L, text30))
-      drive(("retract", 20L, text20))
-      // LAST contributor retracted in the same batch as the next
-      // copy: first sight
-      drive(("retract", 30L, text30),
-        ("ingest", 40L, s"$spanS ${toks("d", 5)}"))
-    } finally query.stop()
-    assert(got((0L, 6L)) == 55L,
-      s"the seeded corpus must clean batch 0: ${got((0L, 6L))}")
-    assert(got((0L, 10L)) == 0L)
-    assert(got((1L, 20L)) == 50L,
-      s"spanS must clean while its origin lives: ${got((1L, 20L))}")
-    assert(got((3L, 30L)) == 50L,
-      "retracting the origin alone must NOT un-suppress while " +
-        s"another contributor lives: ${got((3L, 30L))}")
-    assert(got((5L, 40L)) == 0L,
-      "once every contributor is retracted the next copy is first " +
-        s"sight: ${got((5L, 40L))}")
-    // the base fold discarded tombstones and doc 10's attribution
-    val bases = StreamOpsSpecHelpers.committedDirs(idx, "base_")
-    val real = bases.keySet.filter(_ >= 0)
-    assert(real.nonEmpty, s"${bases.keySet}")
-    val newest = spark.read.parquet(bases(real.max).getAbsolutePath)
-    assert(newest.where(col(DeltaIndex.OpCol) === "d").count() == 0L)
-    assert(newest.where(col("doc_id") === 10L).count() == 0L,
-      "the retracted doc's attribution rows must leave the index " +
-        "at the fold")
   }
 
   test("compactCrawlPrepareIndexes (r18): ONE call compacts all FIVE " +
@@ -1818,93 +1839,95 @@ class StreamOpsSpec extends SparkSpec {
       "bit-identical before and after, and the stream keeps " +
       "deduplicating (URL + near-dup) against the compacted state") {
     import org.apache.spark.sql.DataFrame
-    val root = java.nio.file.Files.createTempDirectory("graft_cmpall")
-    val in = java.nio.file.Files.createDirectory(root.resolve("in"))
-    val urlIdx = root.resolve("uidx").toString
-    val sigIdx = root.resolve("gidx").toString
-    val subIdx = root.resolve("sidx").toString
-    val ckpt = root.resolve("ckpt").toString
-    val labeled = (0L until 20L).map { i =>
-      val lang = if (i % 2 == 0) "aa" else "bb"
-      val t = if (lang == "aa") "red green blue red green blue"
-        else "eins zwei drei eins zwei drei"
-      (i, lang, t)
-    }.toDF("doc_id", "lang", "text")
-    def uniq(p: String, n: Int) = (0 until n).map(i =>
-      s"$p${('a' + i / 26).toChar}${('a' + i % 26).toChar}")
-      .mkString(" ")
-    def aa(n: Int) = Seq.fill(n / 3 + 1)("red green blue")
-      .mkString(" ").split(" ").take(n).mkString(" ")
-    val evalDocs = Seq((9000L, uniq("ev", 40))).toDF("doc_id", "text")
-    val policy = graft.operators.Crawl.defaultPolicy(spark)
-    val gate: DataFrame => DataFrame = d => d
-    def page(id: Long, url: String, body: String) =
-      (id, url, graft.operators.Crawl.wrapHtml(id, body))
-    // ≥ 50 post-scrub tokens so the substr chain gets real digests
-    // (the default window length is 50)
-    def body(b: Int) = s"${aa(6)} ${uniq(s"w${('a' + b).toChar}", 60)}"
-    def writeSeg(name: String,
-        pages: Seq[(Long, String, String)]): Unit =
-      java.nio.file.Files.write(in.resolve(name),
-        graft.operators.Crawl.encodeArchive(pages))
-    val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val query = StreamOps.crawlPrepareStream(spark, in.toString,
-      labeled, gate, policy, evalDocs, urlIdx, sigIdx, subIdx,
-      Seq.empty[String].toDF("canon_url"),
-      Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig"),
-      Seq.empty[String].toDF("h"), ckpt, compactEvery = 2,
-      inlineBaseFold = false) { (batch, id) =>
-      got(id) = batch.select("doc_id").as[Long].collect().toSet
-    }
-    try {
-      for (b <- 0 until 6) {
-        writeSeg(s"part$b.garc", Seq(
-          page(100L + 10 * b, s"https://h$b.example.org/p", body(b))))
+    withTempDir("graft_cmpall") { d =>
+      val root = java.nio.file.Path.of(d)
+      val in = java.nio.file.Files.createDirectory(root.resolve("in"))
+      val urlIdx = root.resolve("uidx").toString
+      val sigIdx = root.resolve("gidx").toString
+      val subIdx = root.resolve("sidx").toString
+      val ckpt = root.resolve("ckpt").toString
+      val labeled = (0L until 20L).map { i =>
+        val lang = if (i % 2 == 0) "aa" else "bb"
+        val t = if (lang == "aa") "red green blue red green blue"
+          else "eins zwei drei eins zwei drei"
+        (i, lang, t)
+      }.toDF("doc_id", "lang", "text")
+      def uniq(p: String, n: Int) = (0 until n).map(i =>
+        s"$p${('a' + i / 26).toChar}${('a' + i % 26).toChar}")
+        .mkString(" ")
+      def aa(n: Int) = Seq.fill(n / 3 + 1)("red green blue")
+        .mkString(" ").split(" ").take(n).mkString(" ")
+      val evalDocs = Seq((9000L, uniq("ev", 40))).toDF("doc_id", "text")
+      val policy = graft.operators.Crawl.defaultPolicy(spark)
+      val gate: DataFrame => DataFrame = d => d
+      def page(id: Long, url: String, body: String) =
+        (id, url, graft.operators.Crawl.wrapHtml(id, body))
+      // ≥ 50 post-scrub tokens so the substr chain gets real digests
+      // (the default window length is 50)
+      def body(b: Int) = s"${aa(6)} ${uniq(s"w${('a' + b).toChar}", 60)}"
+      def writeSeg(name: String,
+          pages: Seq[(Long, String, String)]): Unit =
+        java.nio.file.Files.write(in.resolve(name),
+          graft.operators.Crawl.encodeArchive(pages))
+      val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
+      val query = StreamOps.crawlPrepareStream(spark, in.toString,
+        labeled, gate, policy, evalDocs, urlIdx, sigIdx, subIdx,
+        Seq.empty[String].toDF("canon_url"),
+        Seq.empty[(Long, Array[Long])].toDF("doc_id", "sig"),
+        Seq.empty[String].toDF("h"), ckpt, compactEvery = 2,
+        inlineBaseFold = false) { (batch, id) =>
+        got(id) = batch.select("doc_id").as[Long].collect().toSet
+      }
+      try {
+        for (b <- 0 until 6) {
+          writeSeg(s"part$b.garc", Seq(
+            page(100L + 10 * b, s"https://h$b.example.org/p", body(b))))
+          query.processAllAvailable()
+        }
+        assert((0 until 6).forall(b => got(b.toLong) ==
+          Set(100L + 10 * b)), s"$got")
+        // inlineBaseFold=false: every chain holds mids {1,3,5}, no
+        // real base — the sweep below owns the base tier
+        val chains = Seq(urlIdx, s"$sigIdx/sigs", s"$sigIdx/bands",
+          s"$sigIdx/maxid", subIdx)
+        chains.foreach { c =>
+          assert(StreamOpsSpecHelpers.committedDirs(c, "mid_")
+            .keySet == Set(1L, 3L, 5L), s"$c mids")
+          assert(StreamOpsSpecHelpers.committedDirs(c, "base_")
+            .keySet.filter(_ >= 0).isEmpty, s"$c bases before sweep")
+        }
+        def state(c: String): Set[String] =
+          DeltaIndex.readCommitted(c, spark).get.distinct()
+            .collect().map(_.toString).toSet
+        val before = chains.map(c => c -> state(c)).toMap
+        // THE one call, against the LIVE stream
+        assert(query.isActive)
+        val swept = StreamOps.compactCrawlPrepareIndexes(urlIdx,
+          sigIdx, subIdx, spark)
+        assert(swept.keySet == Set("url/seen", "neardup/sigs",
+          "neardup/bands", "neardup/maxid", "substr/digests"))
+        assert(swept.values.forall(_ == Some(5L)),
+          s"every chain folds at the newest-mid watermark: $swept")
+        chains.foreach { c =>
+          assert(StreamOpsSpecHelpers.committedDirs(c, "base_")
+            .keySet.contains(5L), s"$c must hold base_5 after sweep")
+          assert(state(c) == before(c),
+            s"accumulated state must not change at $c")
+        }
+        // the stream keeps deduplicating against the compacted state:
+        // a respelling of the batch-0 URL and a near-copy of the
+        // batch-0 body both drop; the fresh page passes
+        writeSeg("part6.garc", Seq(
+          page(200L, "HTTPS://H0.EXAMPLE.ORG:443/p#frag", body(0)),
+          page(201L, "https://h6.example.org/near",
+            s"${body(0).split(" ").dropRight(1).mkString(" ")} zz"),
+          page(202L, "https://h6.example.org/fresh", body(6))))
         query.processAllAvailable()
-      }
-      assert((0 until 6).forall(b => got(b.toLong) ==
-        Set(100L + 10 * b)), s"$got")
-      // inlineBaseFold=false: every chain holds mids {1,3,5}, no
-      // real base — the sweep below owns the base tier
-      val chains = Seq(urlIdx, s"$sigIdx/sigs", s"$sigIdx/bands",
-        s"$sigIdx/maxid", subIdx)
-      chains.foreach { c =>
-        assert(StreamOpsSpecHelpers.committedDirs(c, "mid_")
-          .keySet == Set(1L, 3L, 5L), s"$c mids")
-        assert(StreamOpsSpecHelpers.committedDirs(c, "base_")
-          .keySet.filter(_ >= 0).isEmpty, s"$c bases before sweep")
-      }
-      def state(c: String): Set[String] =
-        DeltaIndex.readCommitted(c, spark).get.distinct()
-          .collect().map(_.toString).toSet
-      val before = chains.map(c => c -> state(c)).toMap
-      // THE one call, against the LIVE stream
-      assert(query.isActive)
-      val swept = StreamOps.compactCrawlPrepareIndexes(urlIdx,
-        sigIdx, subIdx, spark)
-      assert(swept.keySet == Set("url/seen", "neardup/sigs",
-        "neardup/bands", "neardup/maxid", "substr/digests"))
-      assert(swept.values.forall(_ == Some(5L)),
-        s"every chain folds at the newest-mid watermark: $swept")
-      chains.foreach { c =>
-        assert(StreamOpsSpecHelpers.committedDirs(c, "base_")
-          .keySet.contains(5L), s"$c must hold base_5 after sweep")
-        assert(state(c) == before(c),
-          s"accumulated state must not change at $c")
-      }
-      // the stream keeps deduplicating against the compacted state:
-      // a respelling of the batch-0 URL and a near-copy of the
-      // batch-0 body both drop; the fresh page passes
-      writeSeg("part6.garc", Seq(
-        page(200L, "HTTPS://H0.EXAMPLE.ORG:443/p#frag", body(0)),
-        page(201L, "https://h6.example.org/near",
-          s"${body(0).split(" ").dropRight(1).mkString(" ")} zz"),
-        page(202L, "https://h6.example.org/fresh", body(6))))
-      query.processAllAvailable()
-      assert(got(6L) == Set(202L),
-        s"post-compact: URL respelling + near-copy must drop, the " +
-          s"fresh page passes: ${got(6L)}")
-    } finally query.stop()
+        assert(got(6L) == Set(202L),
+          s"post-compact: URL respelling + near-copy must drop, the " +
+            s"fresh page passes: ${got(6L)}")
+      } finally query.stop()
+    }
   }
 }
 
