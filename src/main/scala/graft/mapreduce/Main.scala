@@ -64,14 +64,18 @@ object Main {
   /** The reference's driver loop (src/main.cpp:61-97): one
     * [[MinUniquePrefix.uniquePrefixJob]] round per candidate L through
     * [[MapReduceJob.runWithSinks]] into `outDir/iter<L>/`; returns the found
-    * L, or maxLen + 1 when no candidate length succeeded (Q4 contract). */
+    * L, or maxLen + 1 when no candidate length succeeded (Q4 contract).
+    * The input file is opened once (in at least `mappers` splits) and that
+    * one RDD of lines feeds every round. */
   def findIteratively(spark: SparkSession, input: String, outDir: String,
-      mappers: Int, reducers: Int, maxLen: Int, debug: Boolean): Int =
+      mappers: Int, reducers: Int, maxLen: Int, debug: Boolean): Int = {
+    val lines = spark.sparkContext.textFile(input, mappers)
     (1 to maxLen).find { l =>
       MinUniquePrefix.uniquePrefixJob(mappers, reducers, l)
-        .runWithSinks(spark, input, s"$outDir/iter$l", debug)(
+        .runWithSinks(lines, s"$outDir/iter$l", debug)(
           b => if (b) "1" else "0")
     }.getOrElse(maxLen + 1)
+  }
 
   private val usage: String =
     """usage: graft.mapreduce.Main -i <input file> [options]

@@ -3,7 +3,7 @@ package graft.mapreduce
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{Partitioner, RangePartitioner}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder}
 import scala.reflect.ClassTag
 
 /** Generic MapReduce job API — capability parity with the reference's
@@ -69,8 +69,8 @@ final class MapReduceJob[K: Ordering: ClassTag, V: ClassTag, R: ClassTag](
   def run(lines: Dataset[String]): R =
     reduceRound(lines.rdd).reduce(merge) // aggregate (runner.cpp:68-76)
 
-  /** Run with the reference's file-layout sinks (O12, reference
-    * src/runner.cpp:18-19,45-47,65-78): under `outDir`,
+  /** Run over `lines` with the reference's file-layout sinks (O12,
+    * reference src/runner.cpp:18-19,45-47,65-78): under `outDir`,
     *
     *   - `mapper/part-*` — one sorted run per map task, in the reducers'
     *     key order, as `"key value"` text (reference mapper/map.N.txt
@@ -83,9 +83,8 @@ final class MapReduceJob[K: Ordering: ClassTag, V: ClassTag, R: ClassTag](
     *
     * Returns the merged result like [[run]].
     */
-  def runWithSinks(spark: SparkSession, inputPath: String, outDir: String,
+  def runWithSinks(lines: RDD[String], outDir: String,
       debug: Boolean = false)(format: R => String): R = {
-    val lines = spark.sparkContext.textFile(inputPath, mappers)
     if (debug) writeMapperRuns(lines, s"$outDir/mapper")
     val perPartition = reduceRound(lines)
     val dir = java.nio.file.Paths.get(outDir, "reducer")

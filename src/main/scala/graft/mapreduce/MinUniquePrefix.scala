@@ -1,6 +1,7 @@
 package graft.mapreduce
 
 import graft.functions.CommonPrefixLength
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions._
   * Three implementations:
   *
   *   - [[find]] — literal parity with the reference's iterative driver
-  *     loop (one distributed job per candidate L, stop at first success);
+  *     loop (one distributed job per candidate L, stop at first success),
+  *     over lines sorted once;
   *   - [[findOneShot]] — all candidate lengths in ONE job (explode L,
   *     two-level aggregation); what the driver loop should have been;
   *   - [[minUniqueLen]] — the 100 TB-scale algorithm: sort lines once
@@ -26,23 +28,78 @@ import org.apache.spark.sql.functions._
   */
 object MinUniquePrefix {
 
-  /** Iterative driver parity (reference src/main.cpp:61-97). Returns the
-    * first L in [1, maxLen] whose prefixes are all unique, else -1.
+  /** Iterative driver parity (reference src/main.cpp:61-97): the first L
+    * in [1, maxLen] whose prefixes are all unique, else -1. One
+    * distributed job per candidate L, stopping at the first success.
+    *
+    * The reference re-sorts the mapped prefixes for every L, but the sort
+    * does not depend on L: the lines are sorted once ([[sortedRuns]]), and
+    * each L is then one single-stage job over those sorted runs that
+    * reuses the sort's shuffle output. Sorted order keeps every group of
+    * lines that share an L-prefix contiguous, so each partition compares
+    * adjacent L-prefixes — the reference's adjacent-compare reducer — and
+    * returns (first prefix, last prefix, saw duplicate); the driver
+    * stitches the partition boundaries.
+    *
+    * Prefixes count code points, as SQL `substring` does. Null lines share
+    * one null prefix, as in a SQL `groupBy`: two or more collide at every
+    * L, a single one is unique. Empty input gives 1.
     */
   def find(lines: Dataset[String], maxLen: Int): Int = {
-    val cached = lines.cache()
-    try {
-      var l = 1
-      while (l <= maxLen) {
-        val dup = cached
-          .select(substring(col("value"), 1, l).as("p"))
-          .groupBy("p").count()
-          .filter(col("count") > 1)
-        if (dup.isEmpty) return l
-        l += 1
+    val runs = sortedRuns(lines).rdd
+    (1 to maxLen).find(l => prefixesUnique(runs, l)).getOrElse(-1)
+  }
+
+  /** True when every `l`-prefix of the sorted `runs` is unique: one job of
+    * per-partition summaries, stitched at the partition boundaries. */
+  private def prefixesUnique(runs: RDD[String], l: Int): Boolean = {
+    val summaries = runs.mapPartitions(prefixSummary(_, l)).collect()
+    !summaries.exists(_._3) && summaries.indices.drop(1).forall { i =>
+      summaries(i - 1)._2 != summaries(i)._1
+    }
+  }
+
+  /** (first prefix, last prefix, saw duplicate) of one sorted partition,
+    * nothing for an empty one. Stops at the first duplicate, which already
+    * decides the job. */
+  private def prefixSummary(it: Iterator[String],
+      l: Int): Iterator[(String, String, Boolean)] =
+    if (!it.hasNext) Iterator.empty
+    else {
+      val first = codePointPrefix(it.next(), l)
+      var last = first
+      var dup = false
+      while (!dup && it.hasNext) {
+        val p = codePointPrefix(it.next(), l)
+        dup = p == last
+        last = p
       }
-      -1
-    } finally cached.unpersist()
+      Iterator.single((first, last, dup))
+    }
+
+  /** The first `l` code points of `s` (all of a shorter `s`), as SQL
+    * `substring(s, 1, l)` counts them; null stays null. */
+  private def codePointPrefix(s: String, l: Int): String =
+    if (s == null || s.length <= l) s
+    else {
+      var end = 0
+      var n = 0
+      while (n < l && end < s.length) {
+        end += Character.charCount(s.codePointAt(end))
+        n += 1
+      }
+      s.substring(0, end)
+    }
+
+  /** `lines` range-partitioned and sorted by value: one shuffle, whose
+    * partitions are sorted runs in global key order. No more partitions
+    * than the input has or `spark.sql.shuffle.partitions` allows. Shared by
+    * [[find]] and [[minUniqueLen]]. */
+  private[mapreduce] def sortedRuns(lines: Dataset[String]): Dataset[String] = {
+    val parts = math.max(1, math.min(
+      lines.sparkSession.sessionState.conf.numShufflePartitions,
+      lines.rdd.getNumPartitions))
+    lines.repartitionByRange(parts, col("value")).sortWithinPartitions("value")
   }
 
   /** One job for all candidate lengths: explode L in [1, maxLen], count
@@ -65,15 +122,9 @@ object MinUniquePrefix {
     * range-partitioned sort; per-partition work is a streaming fold.
     */
   def minUniqueLen(lines: Dataset[String], maxLen: Int): Int = {
-    val spark = lines.sparkSession
-    val parts = math.max(1, math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      math.max(1, (lines.rdd.getNumPartitions))))
     // (first, last, maxLcp, sawDuplicate) per sorted partition, in global
     // key order because the exchange is a RangePartitioner.
-    val summaries = lines
-      .repartitionByRange(parts, col("value"))
-      .sortWithinPartitions("value")
+    val summaries = sortedRuns(lines)
       .mapPartitions { it =>
         if (!it.hasNext) Iterator.empty
         else {

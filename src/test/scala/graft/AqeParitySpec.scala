@@ -56,14 +56,6 @@ class AqeParitySpec extends SparkSpec {
     // round-14 additions
     "q_warc_domain_filter", "pipeline_full_prepare_ppl_refd")
 
-  /** PlanHygieneSpec's allow-list, plus `emb_kmeans_converged`, which
-    * this sweep has allowed since it was added and PlanHygieneSpec never
-    * has. Its k-centroid frames are typed literals joined on `cell`, so
-    * today neither its initial nor its final plan holds an NL join with
-    * AQE on or off (checked at sf0.001); the entry stays here only, so
-    * the hygiene list does not widen and this sweep does not narrow. */
-  private val allowedNl = PlanHygieneSpec.allowed + "emb_kmeans_converged"
-
   test("bench top-10 + round-9 queries: identical results and clean " +
       "plans with AQE ON and OFF") {
     // AQE ON is the shared session's default (InventoryRuns checks it):
@@ -81,7 +73,7 @@ class AqeParitySpec extends SparkSpec {
           else Some(s"$name: AQE on/off results diverge " +
             s"(${on.canonRows.size} vs ${rOff.size} rows)")
         val nl =
-          if (allowedNl(name)) Nil
+          if (PlanHygieneSpec.allowed(name)) Nil
           else Seq("on" -> on.nlJoinsAfter,
             "off" -> InventoryRuns.nlJoins(dOff.queryExecution.executedPlan))
             .collect { case (mode, bad) if bad.nonEmpty =>

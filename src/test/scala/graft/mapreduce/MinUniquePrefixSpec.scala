@@ -1,6 +1,7 @@
 package graft.mapreduce
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.Dataset
 
 /** Golden + property tests for the product query (reference
@@ -95,6 +96,86 @@ class MinUniquePrefixSpec extends SparkSpec {
         s"one-shot disagrees on $lines")
       assert(MinUniquePrefix.minUniqueLen(d, 4) == expected,
         s"lcp variant disagrees on $lines")
+      assert(MinUniquePrefix.find(d, 4) == expected,
+        s"iterative driver disagrees on $lines")
+      assert(MinUniquePrefix.findViaMapReduce(spark, d, 4) == expected,
+        s"generic-MapReduce path disagrees on $lines")
+      assert(MinUniquePrefix.findViaAggregator(d, 4) == expected,
+        s"typed-Aggregator variant disagrees on $lines")
     }
+  }
+
+  test("find counts code points like SQL substring, not UTF-16 units") {
+    // U+1F600 and U+1F601 share their high surrogate: a UTF-16 take(1)
+    // collides, the 1-code-point prefixes do not
+    val emoji = Seq("\uD83D\uDE00", "\uD83D\uDE01")
+    assert(MinUniquePrefix.find(ds(emoji), 3) == 1)
+    // a shared supplementary first code point: unique at 2 code points,
+    // where a UTF-16 take(2) still collides
+    val shared = Seq("\uD83D\uDE00a", "\uD83D\uDE00b", "\uE000a", "\uFFFDa")
+    assert(MinUniquePrefix.find(ds(shared), 3) == 2)
+    // two-byte UTF-8 code points count once
+    assert(MinUniquePrefix.find(ds(Seq("\u00F1a", "\u00F1b")), 3) == 2)
+    for (lines <- Seq(emoji, shared))
+      assert(MinUniquePrefix.find(ds(lines), 3) ==
+        MinUniquePrefix.findOneShot(ds(lines), 3), s"on $lines")
+  }
+
+  test("find: null lines share one prefix, as in a SQL groupBy") {
+    val twoNulls = Seq("a", null, "b", null)
+    assert(MinUniquePrefix.find(ds(twoNulls), 4) == -1)
+    assert(MinUniquePrefix.findOneShot(ds(twoNulls), 4) == -1)
+    val oneNull = Seq("ab", null, "ac")
+    assert(MinUniquePrefix.find(ds(oneNull), 4) == 2)
+    assert(MinUniquePrefix.findOneShot(ds(oneNull), 4) == 2)
+  }
+
+  test("find: a pair that collides only across a partition boundary") {
+    // only b1/b2 share a 1-prefix; the sort puts them in different
+    // partitions, so the collision is seen only by the driver's stitch
+    val lines = Seq("a", "b1", "b2", "c", "d", "e", "f", "g")
+    val runs = MinUniquePrefix.sortedRuns(ds(lines)).rdd.glom().collect()
+      .filter(_.nonEmpty)
+    assert(runs.length >= 2)
+    assert(runs.exists(p => p.last == "b1") && runs.exists(p => p.head == "b2"),
+      s"b1 and b2 must straddle a boundary: ${runs.map(_.toList).toList}")
+    assert(MinUniquePrefix.find(ds(lines), 3) == 2)
+  }
+
+  test("find: empty input gives 1, maxLen = 0 gives -1") {
+    assert(MinUniquePrefix.find(ds(Nil), 3) == 1)
+    assert(MinUniquePrefix.find(ds(Seq("a", "b")), 0) == -1)
+    assert(MinUniquePrefix.find(ds(Nil), 0) == -1)
+  }
+
+  /** Job ids of `group` that ran single-stage, and all of its job ids. */
+  private def findJobs(group: String, lines: Seq[String],
+      expected: Int): (Seq[Int], Seq[Int]) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "MinUniquePrefix.find", interruptOnCancel = false)
+    try assert(MinUniquePrefix.find(ds(lines), 8) == expected)
+    finally sc.clearJobGroup()
+    ListenerBusDrain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group).toSeq.sorted
+    // stages that ran: a stage whose shuffle output a job reuses is
+    // listed in the job but skipped, never submitted
+    val ran = jobs.filter { j =>
+      sc.statusTracker.getJobInfo(j).get.stageIds.toSeq
+        .flatMap(sc.statusTracker.getStageInfo(_))
+        .count(_.submissionTime > 0) == 1
+    }
+    (ran, jobs)
+  }
+
+  test("find sorts once, then launches one single-stage job per " +
+      "candidate L") {
+    val id = java.util.UUID.randomUUID
+    // golden answers 2; "1110" makes 3-prefix "111" collide, so 4
+    val (ran2, jobs2) = findJobs(s"find-l2-$id", goldenLines, 2)
+    val (ran4, jobs4) = findJobs(s"find-l4-$id", goldenLines :+ "1110", 4)
+    assert(jobs4.size - jobs2.size == 2, s"$jobs2 vs $jobs4")
+    // the last job per tried L, each after the sort, runs one stage
+    assert(jobs2.takeRight(2).forall(ran2.contains), s"$jobs2: $ran2")
+    assert(jobs4.takeRight(4).forall(ran4.contains), s"$jobs4: $ran4")
   }
 }
